@@ -1,24 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.catalog.{FunctionQueries, LlmQueries, RelationalQueries, StreamingQueries}
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 
 object JudgeSmoke {
   def main(args: Array[String]): Unit = {
-    JvmGuard.assertSparkModuleAccess()
     val d = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // multi-query session: let ContextCleaner actually run (see Bench)
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cpus, d, "ERROR")
 
     val all = RelationalQueries.queries ++ FunctionQueries.queries ++
       StreamingQueries.queries ++ LlmQueries.queries

@@ -62,21 +62,12 @@ import org.apache.spark.sql.functions._
   */
 object ScaleUp {
   def main(args: Array[String]): Unit = {
-    JvmGuard.assertSparkModuleAccess()
     val skew = args.contains("--skew")
     val pos = args.filterNot(_ == "--skew")
     val src = pos.headOption.getOrElse("/root/testdata/sf0.1")
     val dst = pos.lift(1).getOrElse("/tmp/graft_sf1")
     val factor = pos.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus, src, "WARN")
     derive(spark, src, dst, factor, skew)
     spark.stop()
   }
@@ -103,7 +94,8 @@ object ScaleUp {
     // document twins, and the embeddings sign masks commute
     // (m_a·m_b = m_b·m_a), mirroring copy pairs (a,b)/(b,a). A chained
     // sf10 measured near-dup pair counts 2.9× the true ×100 derivation
-    // (49,608 fabricated cross-copy pairs at sf10 — SsjProbe), which
+    // (49,608 fabricated cross-copy pairs at sf10 — EXPLAINS.md round-13
+    // "the second decade"; `ScaleUpSpec` pins the guard), which
     // read as a fake superlinear exponent on the exact SSJoin family.
     // Always derive from the BASE sf directory in a single pass.
     require(!new java.io.File(s"$src/_scaleup_derived").exists(),

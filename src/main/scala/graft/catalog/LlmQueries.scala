@@ -115,7 +115,9 @@ object LlmQueries {
     if (w >= 1.0) "g" else f"${(w * 4294967296L).toLong}%08x"
 
   /** The per-source threshold when-chain over [[MixtureWeights]] —
-    * single-sourced for the two mixture keys and `CorpusBuildProbe`.
+    * single-sourced for the two mixture keys (`llm_mixture_sample`,
+    * `llm_corpus_build`; build-form timings in
+    * `BENCH_corpusbuild_sf10_r17.json`).
     */
   private[graft] def mixtureThresholdChain: org.apache.spark.sql.Column =
     MixtureWeights.foldLeft(lit("00000000")) {

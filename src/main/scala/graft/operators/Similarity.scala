@@ -109,7 +109,7 @@ object Similarity {
     * re-grew cells linearly beyond ~8M vectors): the quantizer switches
     * to a PRODUCT of two half-dimension codebooks ([[productAssign]]),
     * keeping cell count ∝ n at O(√kTotal) assignment cost per row.
-    * Measured ([[graft.AnnProbe]], `BENCH_ann_product_r12.json`): the
+    * Measured (`BENCH_ann_product_r12.json`): the
     * speedup over an uncapped flat codebook widens with kTotal (1.2× at
     * k=1200 → 2.8× at k=2000) exactly per the asymptotics. The combo
     * space fragments near codebook boundaries, so on the product path
@@ -140,9 +140,9 @@ object Similarity {
 
   /** The multi-probe cell assignment behind [[annSimilarityJoin]]:
     * (vec_id, __blk, embedding, nrm, cid) with `mProbe` rows per vector,
-    * or None when no usable index exists (≤1 cell). Exposed to the spec
-    * and the [[graft.AnnProbe]] cost probe so cell-count and cell-size
-    * boundedness are directly observable.
+    * or None when no usable index exists (≤1 cell). Exposed to
+    * `SimilaritySpec` so cell-count and cell-size boundedness are
+    * directly observable (scale figures: `BENCH_annstage_sf100_r18.json`).
     */
   private[graft] def cellAssignments(emb: DataFrame, blockCol: String,
       targetCellSize: Long, mProbe: Int, iters: Int,

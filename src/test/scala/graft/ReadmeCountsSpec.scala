@@ -46,4 +46,13 @@ class ReadmeCountsSpec extends AnyFunSuite {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracles without queries: $orphans")
   }
+
+  test("README's entry-point list names exactly the mains in src/main") {
+    val para = """(?s)- Entry points.*?(?=\n\s*\n)""".r.findFirstIn(readme)
+      .getOrElse(fail("README.md no longer has its '- Entry points' list"))
+    val listed = """`(graft\.[\w.]+)""".r.findAllMatchIn(para).map(_.group(1)).toSet
+    assert(listed == ContractSpec.mainObjects,
+      s"README lists ${listed.toSeq.sorted}; src/main defines " +
+        ContractSpec.mainObjects.toSeq.sorted)
+  }
 }

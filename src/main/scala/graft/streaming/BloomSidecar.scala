@@ -58,6 +58,16 @@ private[streaming] object BloomSidecar {
     * (columns `__b` int bucket, `__k` long key), EXECUTOR-side: only the
     * ≤ numBuckets serialized sketches cross to the driver — never the
     * keys — so this is safe for inputs of any size.
+    *
+    * The FIXED `numBuckets`-way repartition is deliberate, unlike the
+    * coalescable rebalances that stage the ingest writes: it keeps each
+    * bucket alone in its task, so a task builds one sketch (up to ~10 MB
+    * at `CorpusIngest.MaxBucketCapacity` on the index-sized [[rebuild]]
+    * path) and at most `numBuckets` sketches reach the driver. Coalescing
+    * would put several buckets' sketches in one task's memory at once; a
+    * count-free variant saved a median 1.9% of ingest CPU on the
+    * micro-batch path (EXPLAINS.md "Batch-sized staged writes"), not
+    * worth losing the bound.
     */
   def buildBucketBlooms(keyed: DataFrame, capacity: Long,
       numBuckets: Int): Map[Int, (BloomFilter, Long)] = {

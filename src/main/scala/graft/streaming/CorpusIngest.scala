@@ -457,15 +457,22 @@ object CorpusIngest {
       mergeBloom(s, manifestDir, batchId, b, st, manifestExists) // bloom-ahead
       val appended =
         if (!manifestExists) {
-          // repartition by the BUCKET key before the bucketed write
-          // (guide §6, r20): HashPartitioning((__h,__len), ManifestBuckets)
+          // stage through a rebalance on the bucket key with the bucket
+          // count as its initial partition count (EXPLAINS.md
+          // "Batch-sized staged writes"; the FuzzyIngest rationale):
+          // HashPartitioning((__h, __len), ManifestBuckets)
           // .partitionIdExpression IS the bucket-id expression, so each
-          // write task holds exactly one bucket and the first batch lands
-          // at the 16-file layout floor — without this the seed partition
-          // wrote (window-shuffle tasks)×(buckets) tiny files that every
-          // later anti-join scan re-opened. Batch-sized exchange only.
+          // initial partition is one bucket, and AQE coalesces a
+          // rebalance (never a fixed-count repartition) by merging
+          // contiguous partitions — every write task holds whole buckets,
+          // the write (one file per write task and bucket) lands at the
+          // 16-file layout floor at any batch size, and a micro-batch
+          // writes from one task, not one per bucket. Without any
+          // exchange the seed partition wrote (window-shuffle tasks) ×
+          // (buckets) tiny files that every later anti-join scan
+          // re-opened. Batch-sized exchange only.
           survivors
-            .repartition(ManifestBuckets, col("__h"), col("__len"))
+            .hint("rebalance", ManifestBuckets, col("__h"), col("__len"))
             .withColumn("first_batch", lit(batchId))
             .withColumn("batch", lit(batchId)).write
             .partitionBy("batch")
@@ -483,13 +490,12 @@ object CorpusIngest {
           // replaces exactly this batch's partition and nothing else;
           // DataFrameWriter's dynamic-overwrite write-option is ignored by
           // insertInto and would truncate the whole table.
-          // same bucket-key repartition as the first-batch write (guide
-          // §6, r20): the insert writes one file per (task, bucket), so
-          // landing each bucket in one task keeps every batch partition
-          // at the layout's file floor regardless of the anti-join's
-          // output partitioning. Batch-sized exchange only.
+          // same bucket-aligned rebalance as the first-batch write: the
+          // insert writes one file per (write task, bucket), so every
+          // batch partition stays at the file floor whatever the
+          // anti-join's output partitioning. Batch-sized exchange only.
           val staged = survivors
-            .repartition(ManifestBuckets, col("__h"), col("__len"))
+            .hint("rebalance", ManifestBuckets, col("__h"), col("__len"))
             .localCheckpoint(true)
           val view = stageView(s, manifestDir)
           staged.createOrReplaceTempView(view)

@@ -511,14 +511,16 @@ object EmbedIngest {
               signed.join(dup, Seq("vec_id"), "left_anti")
           }
         }
-      // repartition by the BUCKET key before the bucketed insert
-      // (guide §6, r20 — the FuzzyIngest rationale verbatim): each write
-      // task then holds exactly one bucket, so every batch partition
-      // lands at the layout's 16-files-per-kind floor instead of
-      // (write tasks)×(buckets) tiny files. Batch-sized exchange only.
+      // stage through a rebalance on the bucket key with the bucket count
+      // as its initial partition count — the FuzzyIngest rationale
+      // verbatim: each initial partition is one bucket, AQE merges
+      // contiguous ones, so every write task holds whole buckets and each
+      // batch partition lands at the 16-files-per-kind floor at any batch
+      // size, while a micro-batch writes from one task. Batch-sized
+      // exchange only.
       val staged = survivors
         .select(col("vec_id"), col("label"), col("embedding"), col("nrm"), col("fp"))
-        .repartition(IndexBuckets, col("vec_id"))
+        .hint("rebalance", IndexBuckets, col("vec_id"))
         .localCheckpoint(true)
       try {
         mark("verify+stage")

@@ -514,19 +514,26 @@ object FuzzyIngest {
       // read-old-then-overwrite via localCheckpoint (the insert below
       // reads the same tables it overwrites — same pattern as the exact
       // manifest); batch-sized, never index-sized.
-      // repartition by the BUCKET key first (guide §6, r20): the bucketed
-      // insert below writes one file per (task, bucket, kind), and
-      // HashPartitioning(doc_id, IndexBuckets).partitionIdExpression IS
-      // the bucket-id expression — so each write task holds exactly one
-      // bucket and every partition lands at the 16-files-per-kind layout
-      // floor. Without this the seed batch (survivors = sigs, still in
-      // the window shuffle's layout) wrote 437 tiny files PER KIND at
-      // sf0.1 — a 1.2 s insert job and a per-batch file-open tax on
-      // every later history scan. One batch-sized exchange, never
-      // index-sized.
+      // stage through a REBALANCE on the bucket key whose initial
+      // partition count is the bucket count (EXPLAINS.md "Batch-sized
+      // staged writes"). HashPartitioning(doc_id, IndexBuckets)
+      // .partitionIdExpression IS the bucket-id expression, so each
+      // initial partition holds exactly one bucket; AQE coalesces a
+      // rebalance (never a fixed-count repartition) by merging contiguous
+      // partitions, so every write task still holds whole buckets and the
+      // insert, which writes one file per (write task, bucket, kind),
+      // lands at the 16-files-per-kind floor at any batch size — while a
+      // micro-batch coalesces to ONE task, and its insert and staged
+      // count run 1–2 tasks, not one per bucket. (Only a bucket above
+      // AQE's advisory size splits, into files of about that size.) Without
+      // any exchange the seed batch (survivors = sigs, still in the
+      // window shuffle's layout) wrote 437 tiny files PER KIND at sf0.1;
+      // a count-free exchange mixes buckets across its initial
+      // partitions and wrote up to 72 per kind at sf10. Batch-sized
+      // exchange, never index-sized.
       val staged = survivors
         .select(col("doc_id"), col("lang"), col("minhash"), col("bands"))
-        .repartition(IndexBuckets, col("doc_id"))
+        .hint("rebalance", IndexBuckets, col("doc_id"))
         .localCheckpoint(true)
       try {
         mark("verify+stage")

@@ -598,4 +598,34 @@ class CorpusIngestSpec extends SparkSpec {
     assert(manifestSet() === expected + ((3L, 31L)),
       "post-heal ingest must suppress compacted digests and append the new one")
   }
+
+  // distinct texts, so every row of every batch survives into the manifest
+  private def distinctDocs(s: org.apache.spark.sql.SparkSession, batch: Int, n: Int) =
+    s.createDataFrame((0 until n).map(i => (batch * 1000L + i, s"text $batch $i", "en")))
+      .toDF("doc_id", "text", "lang")
+
+  test("every batch partition holds at most ManifestBuckets part files") {
+    val s2 = WriteLayout.manyTaskSession(spark)
+    val dir = graft.util.Scratch.fresh("ingest_file_floor")
+    // batch 0 lands through saveAsTable, batches 1 and 2 through the
+    // static-partition INSERT OVERWRITE
+    val tasks = WriteLayout.writeTasks(s2, new java.io.File(dir).getName)(
+      (0 until 3).foreach(b =>
+        CorpusIngest.ingestBatch(distinctDocs(s2, b, 300), b.toLong, dir)))
+    assert(tasks.nonEmpty && tasks.max > 1, s"expected multi-task writes: $tasks")
+    val files = WriteLayout.partFiles(spark, dir)
+    assert(files.keySet === Set("batch=0", "batch=1", "batch=2"), s"$files")
+    assert(files.values.forall(n => n > 0 && n <= CorpusIngest.ManifestBuckets),
+      s"part files per batch partition: $files")
+  }
+
+  test("a micro-batch's manifest insert runs one write task") {
+    // the staging exchange is sized to the batch, not to the 16 buckets:
+    // AQE coalesces a ~200-row batch to one partition, so one task writes it
+    val dir = graft.util.Scratch.fresh("ingest_write_tasks")
+    CorpusIngest.ingestBatch(distinctDocs(spark, 0, 200), 0L, dir)
+    val tasks = WriteLayout.writeTasks(spark, new java.io.File(dir).getName)(
+      CorpusIngest.ingestBatch(distinctDocs(spark, 1, 200), 1L, dir))
+    assert(tasks === Seq(1), s"tasks per insert execution: $tasks")
+  }
 }

@@ -151,4 +151,37 @@ class EmbedIngestSpec extends SparkSpec {
       .select(col("vec_id")).as[Long].collect().toSet
     assert(idx == Set(1L, 11L), s"streaming embed ingest mismatch: $idx")
   }
+
+  // random 32-d vectors: pairwise cosine stays far below the 0.99 bar, so
+  // every row of every batch survives
+  private def distinctVecs(s: org.apache.spark.sql.SparkSession, batch: Int, n: Int) = {
+    val rnd = new scala.util.Random(batch)
+    s.createDataFrame((0 until n).map(i => (batch * 1000L + i,
+      Array.fill(32)(rnd.nextGaussian().toFloat), i % 5)))
+      .toDF("vec_id", "embedding", "label")
+  }
+
+  test("every batch partition holds at most IndexBuckets part files per kind") {
+    val s2 = WriteLayout.manyTaskSession(spark)
+    val dir = graft.util.Scratch.fresh("embed_file_floor")
+    val tasks = WriteLayout.writeTasks(s2, new java.io.File(dir).getName)(
+      (0 until 3).foreach(b =>
+        EmbedIngest.ingestBatch(distinctVecs(s2, b, 300), b.toLong, dir)))
+    assert(tasks.nonEmpty && tasks.max > 2, s"expected multi-task writes: $tasks")
+    val files = WriteLayout.partFiles(spark, s"$dir/idx")
+    assert(files.keySet === (0 until 3).flatMap(b =>
+      Seq(s"batch=$b/kind=v", s"batch=$b/kind=b")).toSet, s"$files")
+    assert(files.values.forall(n => n > 0 && n <= EmbedIngest.IndexBuckets),
+      s"part files per (batch, kind) partition: $files")
+  }
+
+  test("a micro-batch's index insert runs one write task per kind") {
+    // one staged partition, read once per unionByName side (vecs, bands)
+    val dir = graft.util.Scratch.fresh("embed_write_tasks")
+    EmbedIngest.ingestBatch(distinctVecs(spark, 0, 200), 0L, dir)
+    val tasks = WriteLayout.writeTasks(spark, new java.io.File(dir).getName)(
+      EmbedIngest.ingestBatch(distinctVecs(spark, 1, 200), 1L, dir))
+    assert(tasks.size == 1 && tasks.head <= 2,
+      s"tasks per insert execution: $tasks")
+  }
 }

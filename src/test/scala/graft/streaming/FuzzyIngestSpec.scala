@@ -440,4 +440,35 @@ class FuzzyIngestSpec extends SparkSpec {
     assert(indexSet() === expected + ((3L, 31L)),
       "post-heal ingest must suppress near-dups of compacted docs")
   }
+
+  // unrelated docs (no shared tokens), so every row of every batch survives
+  private def distinctDocs(s: org.apache.spark.sql.SparkSession, batch: Int, n: Int) =
+    s.createDataFrame((0 until n).map { i =>
+      val id = batch * 1000L + i
+      (id, (1 to 12).map(j => s"w${id}x$j").mkString(" "), "en")
+    }).toDF("doc_id", "text", "lang")
+
+  test("every batch partition holds at most IndexBuckets part files per kind") {
+    val s2 = WriteLayout.manyTaskSession(spark)
+    val dir = graft.util.Scratch.fresh("fuzzy_file_floor")
+    val tasks = WriteLayout.writeTasks(s2, new java.io.File(dir).getName)(
+      (0 until 3).foreach(b =>
+        FuzzyIngest.ingestBatch(distinctDocs(s2, b, 300), b.toLong, dir)))
+    assert(tasks.nonEmpty && tasks.max > 2, s"expected multi-task writes: $tasks")
+    val files = WriteLayout.partFiles(spark, s"$dir/idx")
+    assert(files.keySet === (0 until 3).flatMap(b =>
+      Seq(s"batch=$b/kind=s", s"batch=$b/kind=b")).toSet, s"$files")
+    assert(files.values.forall(n => n > 0 && n <= FuzzyIngest.IndexBuckets),
+      s"part files per (batch, kind) partition: $files")
+  }
+
+  test("a micro-batch's index insert runs one write task per kind") {
+    // one staged partition, read once per unionByName side (sigs, bands)
+    val dir = graft.util.Scratch.fresh("fuzzy_write_tasks")
+    FuzzyIngest.ingestBatch(distinctDocs(spark, 0, 200), 0L, dir)
+    val tasks = WriteLayout.writeTasks(spark, new java.io.File(dir).getName)(
+      FuzzyIngest.ingestBatch(distinctDocs(spark, 1, 200), 1L, dir))
+    assert(tasks.size == 1 && tasks.head <= 2,
+      s"tasks per insert execution: $tasks")
+  }
 }

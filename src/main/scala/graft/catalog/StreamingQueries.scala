@@ -321,16 +321,6 @@ object StreamingQueries {
     // (falsifiability spec-pinned). Suppression/replay/plan contracts
     // stay in FuzzyIngestSpec.
     "llm_dedup_fuzzy_incremental" -> ((s, d) => {
-      // SPARK_GRAFT_INGEST_TIMING=1 → replay-leg stage attribution on
-      // stderr (the ingest legs already trace under the same flag)
-      val trace = sys.env.contains("SPARK_GRAFT_INGEST_TIMING")
-      var t0 = System.nanoTime()
-      def mark(stage: String): Unit = if (trace) {
-        val t1 = System.nanoTime()
-        System.err.println(
-          f"[fuzzy_incr replay] $stage%-14s ${(t1 - t0) / 1e9}%.2fs")
-        t0 = t1
-      }
       val base = graft.util.Scratch.fresh("fuzzy_incr")
       s.conf.set(CorpusIngest.CapacityConf, (1L << 16).toString) // see above
       val docs = Tables.documents(s, d)
@@ -423,7 +413,6 @@ object StreamingQueries {
           .unionByName(b1u.select(col("doc_id"), col("text"))),
         n = 3, threshold = 0.5)
         .localCheckpoint(true) // result-sized; cuts the SSJoin lineage
-      mark("ssjoin_construct")
       val edges = pairs.select(col("a_id").as("x"), col("b_id").as("y"))
         .unionByName(pairs.select(col("b_id").as("x"), col("a_id").as("y")))
       // batch docs with a true shingle-J >= 0.5 partner in `histIds` are
@@ -444,9 +433,7 @@ object StreamingQueries {
       // checkpointed leaves, so the verdict and the returned frame
       // re-plan only batch-sized leaf unions
       val replayKept = kept0.unionByName(kept1).localCheckpoint(true)
-      mark("replay_force")
       graft.util.Par.await(ingests)
-      mark("ingest_wait")
       // ---- verdict: index survivors vs replay survivors ----
       // ONE aggregate action (r13: this replaced two anti-join counts +
       // two cached counts — four driver actions): tag membership bits,
@@ -468,7 +455,6 @@ object StreamingQueries {
           coalesce(sum(when(col("__m").bitwiseAND(4) === 4, lit(1L))),
             lit(0L)))
         .head()
-      mark("verdict")
       val symDiff = vr.getLong(0)
       val nUniq = vr.getLong(1)
       val agreeOk =

@@ -142,11 +142,9 @@ object CorpusIngest {
       // silent no-op before the first non-empty batch creates the table
       // (ADVICE r11: a require here would fail the whole streaming query
       // when the compaction trigger fires during an all-empty prefix)
-      if (s.catalog.tableExists(tbl)) {
-        writeCompactMarker(s, manifestDir, batchId - 1)
-        runCompaction(s, manifestDir, batchId - 1)
-        IngestPaths.clearMarker(s, manifestDir)
-      }
+      if (s.catalog.tableExists(tbl))
+        IngestPaths.compactMarked(s, manifestDir, batchId - 1)(
+          runCompaction(s, manifestDir, _))
     }
 
   /** Orderly writer-lease handover after this process is done with the
@@ -156,11 +154,6 @@ object CorpusIngest {
     */
   def releaseWriterLease(s: SparkSession, manifestDir: String): Unit =
     IngestPaths.releaseLease(s, manifestDir)
-
-  private def fsOf(s: SparkSession, dir: String): (FileSystem, Path) = {
-    val p = new Path(dir)
-    (p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
-  }
 
   /** Within-batch exact dedup + digest columns. Digests are NON-NULL by
     * construction — null text ↦ `(xxhash64(""), -1)`, distinct from empty
@@ -237,9 +230,6 @@ object CorpusIngest {
   private def bloomKeyed(digests: DataFrame): DataFrame =
     digests.select(bucketId.as("__b"), col("__h").as("__k"))
 
-  private def defaultCapacity(s: SparkSession): Long =
-    s.conf.getOption(CapacityConf).map(_.toLong).getOrElse(DefaultBucketCapacity)
-
   /** Sidecar state, or None when no usable per-bucket state exists (fresh
     * manifest, deleted sidecar, or a pre-r11 per-batch layout) — the
     * caller then takes the always-correct plain anti-join and [[compact]]
@@ -256,7 +246,7 @@ object CorpusIngest {
   private def mergeBloom(s: SparkSession, manifestDir: String, batchId: Long,
       b: DataFrame, st: Option[BloomState], manifestExists: Boolean): Unit =
     BloomSidecar.merge(s, bloomDir(manifestDir), ManifestBuckets, batchId,
-      bloomKeyed(b), st, manifestExists, defaultCapacity(s))
+      bloomKeyed(b), st, manifestExists, IngestPaths.defaultCapacity(s))
 
   /** The codegen probe: `bloom_bank_might_contain(<bucket id>, __h)` — a
     * single whole-stage-codegen'd expression dispatching into a BROADCAST
@@ -290,49 +280,9 @@ object CorpusIngest {
   private[graft] def writeCompactMarker(s: SparkSession, manifestDir: String,
       upToBatch: Long): Unit = IngestPaths.writeMarker(s, manifestDir, upToBatch)
 
-  /** Complete a crashed [[compact]] (no-op without a pending marker).
-    * Assumes the manifest table is registered — called from
-    * [[reconcileTable]] right after registration. The roll-forward is a
-    * WRITE, and this path is reachable from pure readers ([[manifest]]) —
-    * so it takes the writer lease FIRST (r12): with the crashed writer's
-    * lease expired it steals and completes the compaction; with a LIVE
-    * foreign writer mid-compaction it refuses loudly instead of
-    * interleaving a second consolidation under the writer's feet (that
-    * writer clears the marker itself moments later).
-    */
-  private def rollForward(s: SparkSession, manifestDir: String): Unit =
-    IngestPaths.readMarker(s, manifestDir).foreach { upToBatch =>
-      // release after the roll-forward when this call TOOK the lease
-      // (reader path / steal): a pure reader must not sit on a stolen
-      // lease for the whole TTL and block the replacement writer (r12
-      // review); a writer that already owned it keeps it
-      val ownedBefore = IngestPaths.readLease(s, manifestDir)
-        .exists(_._1 == IngestPaths.leaseOwner)
-      IngestPaths.acquireLease(s, manifestDir)
-      try {
-        val tbl = tableName(s, manifestDir)
-        if (s.catalog.tableExists(tbl)) {
-          s.catalog.refreshTable(tbl)
-          runCompaction(s, manifestDir, upToBatch)
-        }
-        IngestPaths.clearMarker(s, manifestDir)
-      } finally if (!ownedBefore) IngestPaths.releaseLease(s, manifestDir)
-    }
-
   // ---------------------------------------------------------------------
   // Catalog reconciliation + layout sniffing
   // ---------------------------------------------------------------------
-
-  /** First data file under `p`, if any — the cheap layout sniff. */
-  private def firstDataFile(fs: FileSystem, p: Path): Option[String] = {
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val st = it.next()
-      val n = st.getPath.getName
-      if (n.startsWith("part-") && !n.endsWith(".tmp")) return Some(n)
-    }
-    None
-  }
 
   /** Reject a manifest this code version cannot safely serve (ADVICE
     * r10: registering the bucketed DDL over a pre-r10 PLAIN manifest made
@@ -342,7 +292,7 @@ object CorpusIngest {
     * (their null digests need `<=>`) on a code path no test exercises.
     */
   private def sniffLegacy(s: SparkSession, fs: FileSystem, mPath: Path): Unit = {
-    val dataFile = firstDataFile(fs, mPath)
+    val dataFile = IngestPaths.firstDataFile(fs, mPath)
     if (dataFile.isEmpty) return // no files yet: effectively absent
     val why =
       if (!dataFile.get.matches(""".*_\d{5}\.c\d+.*"""))
@@ -371,7 +321,7 @@ object CorpusIngest {
     */
   private def reconcileTable(s: SparkSession, manifestDir: String): Boolean = {
     val tbl = tableName(s, manifestDir)
-    val (fs, mPath) = fsOf(s, manifestDir)
+    val (fs, mPath) = IngestPaths.fsOf(s, manifestDir)
     val pathExists = fs.exists(mPath)
     if (!pathExists && s.catalog.tableExists(tbl)) s.sql(s"DROP TABLE `$tbl`")
     if (pathExists) {
@@ -381,7 +331,8 @@ object CorpusIngest {
       // every micro-batch is a per-batch listing+footer job for nothing
       // (r11 constant-shave)
       if (!s.catalog.tableExists(tbl)) sniffLegacy(s, fs, mPath)
-      if (!s.catalog.tableExists(tbl) && firstDataFile(fs, mPath).isDefined) {
+      if (!s.catalog.tableExists(tbl) &&
+          IngestPaths.firstDataFile(fs, mPath).isDefined) {
         s.sql(
           s"""CREATE TABLE `$tbl` (
              |  doc_id BIGINT, lang STRING, `__h` BIGINT, `__len` INT,
@@ -395,7 +346,8 @@ object CorpusIngest {
       }
       // heal a crashed compact before anything reads or merges (the
       // marker is the durable intent record — see IngestPaths.markerPath)
-      rollForward(s, manifestDir)
+      IngestPaths.rollForward(s, manifestDir, tbl)(
+        runCompaction(s, manifestDir, _))
     }
     s.catalog.tableExists(tbl)
   }
@@ -459,7 +411,7 @@ object CorpusIngest {
         if (!manifestExists) {
           // stage through a rebalance on the bucket key with the bucket
           // count as its initial partition count (EXPLAINS.md
-          // "Batch-sized staged writes"; the FuzzyIngest rationale):
+          // "Batch-sized staged writes"; the LshIndex rationale):
           // HashPartitioning((__h, __len), ManifestBuckets)
           // .partitionIdExpression IS the bucket-id expression, so each
           // initial partition is one bucket, and AQE coalesces a
@@ -561,9 +513,8 @@ object CorpusIngest {
       s"compact(upToBatch=$upToBatch): the newest batch (${maxBatch}) may " +
         "still replay under foreachBatch's at-least-once contract and must " +
         "stay in its own partition")
-    writeCompactMarker(s, manifestDir, upToBatch)
-    runCompaction(s, manifestDir, upToBatch)
-    IngestPaths.clearMarker(s, manifestDir)
+    IngestPaths.compactMarked(s, manifestDir, upToBatch)(
+      runCompaction(s, manifestDir, _))
   }
 
   /** The compaction body — everything between marker write and clear.
@@ -616,7 +567,7 @@ object CorpusIngest {
       IngestPaths.acquireLease(s, manifestDir)
       // files first (manifest() is a path read and must not resurrect
       // merged rows), then catalog metadata; both idempotent on re-run
-      val (fs, mPath) = fsOf(s, manifestDir)
+      val (fs, mPath) = IngestPaths.fsOf(s, manifestDir)
       fs.listStatus(mPath).filter(_.isDirectory).foreach { st =>
         val n = st.getPath.getName
         if (n.startsWith("batch=")) {
@@ -643,7 +594,7 @@ object CorpusIngest {
     val maxBatch = s.table(tbl).agg(max(col("batch"))).head().getAs[Number](0)
     if (maxBatch == null) return
     BloomSidecar.rebuild(s, bloomDir(manifestDir), ManifestBuckets,
-      bloomKeyed(s.table(tbl)), maxBatch.longValue, defaultCapacity(s),
+      bloomKeyed(s.table(tbl)), maxBatch.longValue, IngestPaths.defaultCapacity(s),
       MaxBucketCapacity)
   }
 
@@ -676,7 +627,7 @@ object CorpusIngest {
         "contract and must stay")
     var removed = 0L
     // whole-partition drops for the per-batch partitions
-    val (fs, mPath) = fsOf(s, manifestDir)
+    val (fs, mPath) = IngestPaths.fsOf(s, manifestDir)
     fs.listStatus(mPath).filter(_.isDirectory).foreach { st =>
       val n = st.getPath.getName
       if (n.startsWith("batch=")) {
@@ -733,7 +684,7 @@ object CorpusIngest {
       dstDir: String): Long = {
     require(reconcileTable(s, aDir), s"no manifest at $aDir")
     require(reconcileTable(s, bDir), s"no manifest at $bDir")
-    val (fs, dstPath) = fsOf(s, dstDir)
+    val (fs, dstPath) = IngestPaths.fsOf(s, dstDir)
     require(!fs.exists(dstPath), s"merge destination already exists: $dstDir")
     // same overlap guard as the fuzzy/embed twins (ADVICE r12): dedup is
     // digest-keyed, so two manifests sharing a doc_id under DIFFERENT

@@ -97,6 +97,21 @@ class EmbedIngestSpec extends SparkSpec {
     assert(idx == Seq(1L, 2L), s"replay mismatch: $idx")
   }
 
+  test("an all-dropped first batch leaves no index; the next batch starts it") {
+    // existence is "a part- file under idx" (the fuzzy/corpus rule): the
+    // first batch's empty insert must not register a data-less index
+    val dir = graft.util.Scratch.fresh("embed_empty_first")
+    EmbedIngest.ingestBatch(vecs((1L, Array.fill(8)(0.0f), 0),
+      (2L, null.asInstanceOf[Array[Float]], 0)), 0L, dir)
+    EmbedIngest.ingestBatch(vecs((3L, unit(0), 0)), 1L, dir)
+    EmbedIngest.ingestBatch(vecs(
+      (4L, unit(0).map(_ * 1.01f), 0), (5L, unit(4), 4)), 2L, dir)
+    val idx = EmbedIngest.index(spark, dir)
+      .select(col("batch").cast("long"), col("vec_id"))
+      .as[(Long, Long)].collect().toSet
+    assert(idx == Set((1L, 3L), (2L, 5L)), s"index after an empty first batch: $idx")
+  }
+
   test("a legacy two-table (vecs+bands) index dir is rejected with a clear error") {
     // ADVICE r14 medium: without the sniff, reconcile on a pre-r14 layout
     // probed only indexDir/idx, returned false, and ingestBatch silently

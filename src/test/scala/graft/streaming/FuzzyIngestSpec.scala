@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -7,6 +8,9 @@ import graft.SparkSpec
 /** Incremental fuzzy-dedup index semantics: cross-batch NEAR-dup
   * suppression (the case the exact manifest cannot see), unrelated docs
   * passing through, idempotent replay, and the bucket-local probe plan.
+  * The specs about the shared [[LshIndex]] store — probe plan, crashed
+  * compaction, roll-forward lease — run over both kinds; their embed
+  * cases carry an " (embed)" suffix.
   */
 class FuzzyIngestSpec extends SparkSpec {
   import spark.implicits._
@@ -18,6 +22,40 @@ class FuzzyIngestSpec extends SparkSpec {
 
   private def docs(rows: (Long, String, String)*) =
     rows.toDF("doc_id", "text", "lang")
+
+  /** One index kind for the specs both kinds run: `rows` builds a batch
+    * of (id, item) — items 0-4 pairwise dissimilar, item [[NearA]] a
+    * near-dup of item 0 that the index must suppress.
+    */
+  private case class Kind(suffix: String, idx: LshIndex,
+      rows: (SparkSession, Seq[(Long, Int)]) => DataFrame,
+      ingest: (DataFrame, Long, String) => Unit) {
+    def put(batchId: Long, dir: String, items: (Long, Int)*): Unit =
+      ingest(rows(spark, items), batchId, dir)
+    def indexSet(s: SparkSession, dir: String): Set[(Long, Long)] = {
+      val df = idx.index(s, dir)
+      df.select(col("batch").cast("long"), col(df.columns.head))
+        .as[(Long, Long)].collect().toSet
+    }
+  }
+  private val NearA = 5
+  private val fuzzy = {
+    val texts = Seq(baseA, baseB, baseC, "tiny unrelated text here",
+      "another tiny doc", baseA.replace("alpha7", "edited"))
+    Kind("", FuzzyIngest, (s, items) => {
+      import s.implicits._
+      items.map { case (id, i) => (id, texts(i), "en") }.toDF("doc_id", "text", "lang")
+    }, FuzzyIngest.ingestBatch(_, _, _))
+  }
+  private val embed = {
+    def unit(i: Int) = { val v = Array.fill(8)(0.0f); v(i) = 1.0f; v }
+    // a positive rescale keeps every sign bit: a guaranteed band hit
+    val vecs = (0 until NearA).map(unit) :+ unit(0).map(_ * 1.01f)
+    Kind(" (embed)", EmbedIngest, (s, items) => {
+      import s.implicits._
+      items.map { case (id, i) => (id, vecs(i), 0) }.toDF("vec_id", "embedding", "label")
+    }, EmbedIngest.ingestBatch(_, _, _))
+  }
 
   test("near-dups of earlier batches are suppressed; new docs survive") {
     val dir = graft.util.Scratch.fresh("fuzzy_ingest_spec")
@@ -68,51 +106,47 @@ class FuzzyIngestSpec extends SparkSpec {
       s"replay must reproduce the same index: $idx")
   }
 
-  test("LSH probe ships the BATCH side: NO exchange on the band-index side") {
-    // r14 single-table contract: the probe broadcasts the (micro-batch
-    // bounded) new bands, the kind='b' partition slice scans with no
-    // shuffle and no sort — partition pruning must reach the scan so a
-    // probe never reads signature bytes
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "4")
-    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    import s2.implicits._
-    def docs2(rows: (Long, String, String)*) =
-      rows.toDF("doc_id", "text", "lang")
-    val dir = graft.util.Scratch.fresh("fuzzy_plan_spec")
-    FuzzyIngest.ingestBatch(docs2((1L, baseA, "en"), (2L, baseB, "en")), 0L, dir)
-    FuzzyIngest.ingestBatch(docs2((10L, baseC, "en")), 1L, dir)
+  for (k <- Seq(fuzzy, embed))
+    test(s"LSH probe ships the BATCH side: NO exchange on the band-index side${k.suffix}") {
+      // r14 single-table contract: the probe broadcasts the (micro-batch
+      // bounded) new bands, the kind='b' partition slice scans with no
+      // shuffle and no sort — partition pruning must reach the scan so a
+      // probe never reads signature bytes
+      val s2 = spark.newSession()
+      s2.conf.set("spark.sql.shuffle.partitions", "4")
+      s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val dir = graft.util.Scratch.fresh("fuzzy_plan_spec")
+      k.ingest(k.rows(s2, Seq(1L -> 0, 2L -> 1)), 0L, dir)
+      k.ingest(k.rows(s2, Seq(10L -> 2)), 1L, dir)
 
-    val probe = graft.operators.Dedup
-      .minhashSignatures(docs2((30L, baseA + " x", "en")), "text", "doc_id")
-      .select(col("doc_id"), posexplode(col("bands")).as(Seq("band", "bh")))
-    val cand = FuzzyIngest.bandCandidates(probe, 2L, FuzzyIngest.bands(s2, dir))
+      val probe = k.idx.postings(k.idx.signBatch(k.rows(s2, Seq(30L -> NearA))))
+      val cand = k.idx.bandCandidates(probe, 2L, k.idx.bands(s2, dir))
 
-    val plan = cand.queryExecution.executedPlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        a.executedPlan
-      case p => p
+      val plan = cand.queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          a.executedPlan
+        case p => p
+      }
+      val joins = plan.collect {
+        case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => j
+      }
+      assert(joins.nonEmpty, s"expected a broadcast probe join:\n$plan")
+      val idxSide = joins.head.buildSide match {
+        case org.apache.spark.sql.catalyst.optimizer.BuildLeft => joins.head.right
+        case _ => joins.head.left
+      }
+      assert(idxSide.collect {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+      }.isEmpty, s"band index must not re-shuffle per batch:\n$plan")
+      val scans = idxSide.collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+      }
+      assert(scans.nonEmpty &&
+        scans.head.metadata("PartitionFilters").contains("kind"),
+        s"probe scan must partition-prune to kind='b':\n${scans.headOption.map(_.metadata)}")
+      // and the near-dup of item 0 is a candidate against it
+      assert(cand.select(col("old_id")).as[Long].collect().toSet === Set(1L))
     }
-    val joins = plan.collect {
-      case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => j
-    }
-    assert(joins.nonEmpty, s"expected a broadcast probe join:\n$plan")
-    val idxSide = joins.head.buildSide match {
-      case org.apache.spark.sql.catalyst.optimizer.BuildLeft => joins.head.right
-      case _ => joins.head.left
-    }
-    assert(idxSide.collect {
-      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
-    }.isEmpty, s"band index must not re-shuffle per batch:\n$plan")
-    val scans = idxSide.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }
-    assert(scans.nonEmpty &&
-      scans.head.metadata("PartitionFilters").contains("kind"),
-      s"probe scan must partition-prune to kind='b':\n${scans.headOption.map(_.metadata)}")
-    // and the near-dup of A is a candidate against A
-    assert(cand.select(col("old_id")).as[Long].collect().toSet === Set(1L))
-  }
 
   test("within-batch near-dup collapse: flag on keeps min id, off keeps both") {
     val twoNear = docs((5L, baseA, "en"), (6L, baseA + " tail", "en"),
@@ -214,40 +248,39 @@ class FuzzyIngestSpec extends SparkSpec {
     assert(ids === Set(1L, 10L))
   }
 
-  test("roll-forward takes the lease: a live foreign writer blocks the reader (twin)") {
-    // CorpusIngest twin of the r12 roll-forward lease rule on the fuzzy
-    // index: index() hitting a pending marker under a LIVE foreign lease
-    // must refuse rather than interleave a second consolidation
-    val dir = graft.util.Scratch.fresh("fuzzy_rollfwd_lease_spec")
-    FuzzyIngest.ingestBatch(docs((1L, baseA, "en")), 0L, dir)
-    FuzzyIngest.ingestBatch(docs((10L, baseB, "en")), 1L, dir)
-    FuzzyIngest.releaseWriterLease(spark, dir)
-    IngestPaths.writeMarker(spark, dir, 0L)
-    val leaseP = IngestPaths.leasePath(dir)
-    val fs = leaseP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(leaseP, true)
-    try out.write(
-      s"owner=other-writer\nts=${System.currentTimeMillis()}\n".getBytes("UTF-8"))
-    finally out.close()
-    val e = intercept[IllegalStateException](
-      FuzzyIngest.index(spark, dir).collect())
-    assert(e.getMessage.contains("other-writer"), e.getMessage)
-    // stale lease → stolen, rolled forward, served — marker cleared
-    spark.conf.set(IngestPaths.LeaseTtlConf, "50")
-    try {
-      val out2 = fs.create(leaseP, true)
-      try out2.write(
-        s"owner=other-writer\nts=${System.currentTimeMillis() - 10000}\n"
-          .getBytes("UTF-8"))
-      finally out2.close()
-      val ids = FuzzyIngest.index(spark, dir)
-        .select(col("doc_id")).as[Long].collect().toSet
-      assert(ids === Set(1L, 10L))
-    } finally spark.conf.unset(IngestPaths.LeaseTtlConf)
-    assert(IngestPaths.readMarker(spark, dir).isEmpty)
-    assert(IngestPaths.readLease(spark, dir).isEmpty,
-      "reader-path roll-forward must release the lease it took")
-  }
+  for (k <- Seq(fuzzy, embed))
+    test(s"roll-forward takes the lease: a live foreign writer blocks the reader (twin)${k.suffix}") {
+      // CorpusIngest twin of the r12 roll-forward lease rule on the LSH
+      // index: index() hitting a pending marker under a LIVE foreign lease
+      // must refuse rather than interleave a second consolidation
+      val dir = graft.util.Scratch.fresh("fuzzy_rollfwd_lease_spec")
+      k.put(0L, dir, 1L -> 0)
+      k.put(1L, dir, 10L -> 1)
+      IngestPaths.releaseLease(spark, dir)
+      IngestPaths.writeMarker(spark, dir, 0L)
+      val leaseP = IngestPaths.leasePath(dir)
+      val fs = leaseP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val out = fs.create(leaseP, true)
+      try out.write(
+        s"owner=other-writer\nts=${System.currentTimeMillis()}\n".getBytes("UTF-8"))
+      finally out.close()
+      val e = intercept[IllegalStateException](
+        k.idx.index(spark, dir).collect())
+      assert(e.getMessage.contains("other-writer"), e.getMessage)
+      // stale lease → stolen, rolled forward, served — marker cleared
+      spark.conf.set(IngestPaths.LeaseTtlConf, "50")
+      try {
+        val out2 = fs.create(leaseP, true)
+        try out2.write(
+          s"owner=other-writer\nts=${System.currentTimeMillis() - 10000}\n"
+            .getBytes("UTF-8"))
+        finally out2.close()
+        assert(k.indexSet(spark, dir).map(_._2) === Set(1L, 10L))
+      } finally spark.conf.unset(IngestPaths.LeaseTtlConf)
+      assert(IngestPaths.readMarker(spark, dir).isEmpty)
+      assert(IngestPaths.readLease(spark, dir).isEmpty,
+        "reader-path roll-forward must release the lease it took")
+    }
 
   test("compact consolidates both index tables; probe plan and suppression survive") {
     val s2 = spark.newSession()
@@ -406,39 +439,46 @@ class FuzzyIngestSpec extends SparkSpec {
     assert(ev.bloomProbable >= 1L && ev.suppressed === 1L, ev.line)
   }
 
-  test("a crashed compact is rolled forward before any read or merge (intent log)") {
-    val dir = graft.util.Scratch.fresh("fuzzy_crash_compact_spec")
-    FuzzyIngest.ingestBatch(docs((1L, baseA, "en"), (2L, baseB, "en")), 0L, dir)
-    FuzzyIngest.ingestBatch(docs((10L, baseC, "en")), 1L, dir)
-    FuzzyIngest.ingestBatch(docs((20L, "tiny unrelated text here", "es")), 2L, dir)
-    val expected = Set((0L, 1L), (0L, 2L), (1L, 10L), (2L, 20L))
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def indexSet() = FuzzyIngest.index(spark, dir)
-      .select(col("batch").cast("long"), col("doc_id"))
-      .as[(Long, Long)].collect().toSet
+  for (k <- Seq(fuzzy, embed))
+    test(s"a crashed compact is rolled forward before any read or merge (intent log)${k.suffix}") {
+      val dir = graft.util.Scratch.fresh("fuzzy_crash_compact_spec")
+      k.put(0L, dir, 1L -> 0, 2L -> 1)
+      k.put(1L, dir, 10L -> 2)
+      k.put(2L, dir, 20L -> 3)
+      val expected = Set((0L, 1L), (0L, 2L), (1L, 10L), (2L, 20L))
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-    // crash right after the intent write: the next index() read completes
-    // the compaction (BOTH tables) before serving
-    IngestPaths.writeMarker(spark, dir, 1L)
-    assert(indexSet() === expected,
-      "roll-forward must yield exactly the compacted index, no duplicates")
-    assert(!fs.exists(IngestPaths.markerPath(dir)), "marker must be cleared")
-    val partsAfter = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/idx"))
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith("batch=")).toSet
-    assert(partsAfter === Set(s"batch=${CorpusIngest.CompactedBatch}", "batch=2"),
-      s"idx partitions after roll-forward: $partsAfter")
+      // crash right after the intent write: the next index() read completes
+      // the compaction (BOTH kinds) before serving
+      IngestPaths.writeMarker(spark, dir, 1L)
+      assert(k.indexSet(spark, dir) === expected,
+        "roll-forward must yield exactly the compacted index, no duplicates")
+      assert(!fs.exists(IngestPaths.markerPath(dir)), "marker must be cleared")
+      val partsAfter = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/idx"))
+        .filter(_.isDirectory).map(_.getPath.getName)
+        .filter(_.startsWith("batch=")).toSet
+      assert(partsAfter === Set(s"batch=${CorpusIngest.CompactedBatch}", "batch=2"),
+        s"idx partitions after roll-forward: $partsAfter")
 
-    // heal also runs on the merge path, and suppression still sees the
-    // consolidated history: a near-dup of compacted A is dropped
-    IngestPaths.writeMarker(spark, dir, 1L)
-    FuzzyIngest.ingestBatch(docs(
-      (30L, baseA.replace("alpha7", "edited"), "fr"), (31L, "another tiny doc", "en")),
-      3L, dir)
-    assert(!fs.exists(IngestPaths.markerPath(dir)))
-    assert(indexSet() === expected + ((3L, 31L)),
-      "post-heal ingest must suppress near-dups of compacted docs")
+      // heal also runs on the merge path, and suppression still sees the
+      // consolidated history: a near-dup of compacted item 0 is dropped
+      IngestPaths.writeMarker(spark, dir, 1L)
+      k.put(3L, dir, 30L -> NearA, 31L -> 4)
+      assert(!fs.exists(IngestPaths.markerPath(dir)))
+      assert(k.indexSet(spark, dir) === expected + ((3L, 31L)),
+        "post-heal ingest must suppress near-dups of compacted items")
+    }
+
+  test("an all-dropped first batch leaves no index; the next batch starts it") {
+    // existence is "a part- file under idx": the first batch's empty
+    // insert must not register a data-less index the next batch probes
+    val dir = graft.util.Scratch.fresh("fuzzy_empty_first_spec")
+    FuzzyIngest.ingestBatch(Seq((Option.empty[Long], baseA, "en"))
+      .toDF("doc_id", "text", "lang"), 0L, dir)
+    fuzzy.put(1L, dir, 1L -> 0)
+    fuzzy.put(2L, dir, 20L -> NearA, 21L -> 2)
+    assert(fuzzy.indexSet(spark, dir) === Set((1L, 1L), (2L, 21L)))
   }
 
   // unrelated docs (no shared tokens), so every row of every batch survives

@@ -20,6 +20,35 @@ import graft.streaming.{CorpusIngest, EmbedIngest, EventTime, FuzzyIngest}
 object StreamingQueries {
   type QFn = (SparkSession, String) => DataFrame
 
+  /** Stage each of `deliveries` as ONE parquet file
+    * `<base>/today/delivery_<i>.parquet`, mtimes 60 s apart —
+    * modification-time order IS the micro-batch order under
+    * maxFilesPerTrigger=1, and 60 s beats any FS mtime granularity. The
+    * writes touch disjoint paths, so they run overlapped (guide §2.6,
+    * r19). Hadoop FileSystem staging (VERDICT r9): rename/setTimes go
+    * through the path's own filesystem, so this works identically on a
+    * local or an hdfs://-s3a:// scratch root (java.io.File would
+    * silently return false/null there).
+    */
+  private def stageDeliveries(s: SparkSession, base: String,
+      deliveries: Seq[DataFrame]): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$base/today"))
+    deliveries.zipWithIndex.map { case (df, i) =>
+      graft.util.Par.async {
+        val tmp = s"$base/tmp$i"
+        df.coalesce(1).write.parquet(tmp)
+        val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
+          .map(_.getPath).find(_.getName.endsWith(".parquet"))
+          .getOrElse(sys.error(s"no part file in $tmp"))
+        val dst = new org.apache.hadoop.fs.Path(s"$base/today/delivery_$i.parquet")
+        if (!fs.rename(part, dst)) sys.error(s"move failed: $part -> $dst")
+        fs.setTimes(dst, 1600000000000L + i * 60000L, -1)
+      }
+    }.foreach(graft.util.Par.await)
+  }
+
   val queries: Map[String, QFn] = Map(
     "stream_tumbling_counts" -> ((s, d) =>
       EventTime.tumblingCounts(Tables.events(s, d))
@@ -113,29 +142,12 @@ object StreamingQueries {
       val base = graft.util.Scratch.fresh("quality_gate")
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("text"))
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.mkdirs(new org.apache.hadoop.fs.Path(s"$base/today"))
-      Seq(0, 1).map { i =>
-        // two independent writes to disjoint paths — overlapped
-        // (guide §2.6, r19); mtime order stays pinned by setTimes
-        graft.util.Par.async {
-          val tmp = s"$base/tmp$i"
-          // pmod over a null-coalesced id: every document (null or negative
-          // doc_id included) rides EXACTLY one delivery — the twin scores
-          // every non-null-text doc, so a plain `% 2 === i` split would
-          // silently drop null-id rows from both deliveries (ADVICE r13)
-          docs.filter(pmod(coalesce(col("doc_id"), lit(0L)), lit(2)) === i)
-            .coalesce(1).write.parquet(tmp)
-          val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-            .map(_.getPath).find(_.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no part file in $tmp"))
-          val dst =
-            new org.apache.hadoop.fs.Path(s"$base/today/delivery_$i.parquet")
-          if (!fs.rename(part, dst)) sys.error(s"move failed: $part -> $dst")
-          fs.setTimes(dst, 1600000000000L + i * 60000L, -1)
-        }
-      }.foreach(graft.util.Par.await)
+      // pmod over a null-coalesced id: every document (null or negative
+      // doc_id included) rides EXACTLY one delivery — the twin scores
+      // every non-null-text doc, so a plain `% 2 === i` split would
+      // silently drop null-id rows from both deliveries (ADVICE r13)
+      stageDeliveries(s, base, Seq(0, 1).map(i =>
+        docs.filter(pmod(coalesce(col("doc_id"), lit(0L)), lit(2)) === i)))
       val src = KafkaPipeline.fileStream(s, s"$base/today",
         docs.schema, glob = "*.parquet",
         options = Map("maxFilesPerTrigger" -> "1"))
@@ -188,23 +200,8 @@ object StreamingQueries {
         CorpusIngest.ingestBatch(
           docs.filter(pmod(col("doc_id"), lit(5)) === 0), -1L, s"$base/manifest")
       }
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.mkdirs(new org.apache.hadoop.fs.Path(s"$base/today"))
-      Seq(Seq(1, 2), Seq(3, 4)).zipWithIndex.map { case (residues, i) =>
-        graft.util.Par.async {
-          val tmp = s"$base/tmp$i"
-          docs.filter(pmod(col("doc_id"), lit(5)).isin(residues: _*))
-            .coalesce(1).write.parquet(tmp)
-          val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-            .map(_.getPath).find(_.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no part file in $tmp"))
-          val dst =
-            new org.apache.hadoop.fs.Path(s"$base/today/delivery_$i.parquet")
-          if (!fs.rename(part, dst)) sys.error(s"move failed: $part -> $dst")
-          fs.setTimes(dst, 1600000000000L + i * 60000L, -1)
-        }
-      }.foreach(graft.util.Par.await)
+      stageDeliveries(s, base, Seq(Seq(1, 2), Seq(3, 4)).map(residues =>
+        docs.filter(pmod(col("doc_id"), lit(5)).isin(residues: _*))))
       graft.util.Par.await(seedIngest)
       val src = KafkaPipeline.fileStream(s, s"$base/today",
         docs.schema, glob = "*.parquet",
@@ -244,31 +241,8 @@ object StreamingQueries {
         CorpusIngest.ingestBatch(
           docs.filter(pmod(col("doc_id"), lit(5)) === 0), -1L, s"$base/manifest")
       }
-      new org.apache.hadoop.fs.Path(s"$base/today")
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-        .mkdirs(new org.apache.hadoop.fs.Path(s"$base/today"))
-      // Hadoop FileSystem staging (VERDICT r9): rename/setTimes go through
-      // the path's own filesystem, so this works identically whether
-      // Scratch resolves local or a future hdfs://-s3a:// scratch root
-      // (java.io.File would silently return false/null there) — same
-      // migration EventTime.mergeLatest already made.
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      Seq(Seq(1, 2), Seq(3, 4)).zipWithIndex.map { case (residues, i) =>
-        graft.util.Par.async {
-          val tmp = s"$base/tmp$i"
-          docs.filter(pmod(col("doc_id"), lit(5)).isin(residues: _*))
-            .coalesce(1).write.parquet(tmp)
-          val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-            .map(_.getPath).find(_.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no part file in $tmp"))
-          val dst = new org.apache.hadoop.fs.Path(s"$base/today/delivery_$i.parquet")
-          if (!fs.rename(part, dst)) sys.error(s"move failed: $part -> $dst")
-          // modification-time order IS the micro-batch order under
-          // maxFilesPerTrigger; 60 s apart beats any FS mtime granularity
-          fs.setTimes(dst, 1600000000000L + i * 60000L, -1)
-        }
-      }.foreach(graft.util.Par.await)
+      stageDeliveries(s, base, Seq(Seq(1, 2), Seq(3, 4)).map(residues =>
+        docs.filter(pmod(col("doc_id"), lit(5)).isin(residues: _*))))
       graft.util.Par.await(seedIngest)
       val src = KafkaPipeline.fileStream(s, s"$base/today",
         docs.schema, glob = "*.parquet",

@@ -10,13 +10,14 @@ import org.apache.spark.util.sketch.BloomFilter
 
 import graft.functions.{BloomBank, BloomBankProbe}
 
-/** Per-BUCKET bloom sidecar state shared by the persistent ingest
-  * pipelines (extracted r11 from CorpusIngest when FuzzyIngest gained the
-  * same pre-filter): a FIXED set of bloom files + one meta file beside a
-  * bucketed state table, each sketch covering the long keys of one
-  * bucket, so sidecar file count is constant over the table's lifetime.
+/** Per-BUCKET bloom sidecar state of the [[IndexStore]], the one store
+  * behind all three ingest pipelines: a FIXED set of bloom files + one
+  * meta file beside a bucketed index table, each sketch covering the long
+  * keys of one bucket, so sidecar file count is constant over the table's
+  * lifetime.
   *
-  * Contracts (identical for every user, pinned by CorpusIngestSpec):
+  * Contracts (identical for every kind, pinned by CorpusIngestSpec and
+  * FuzzyIngestSpec):
   * - FP-only: sketches are written BEFORE the rows they cover
   *   (bloom-ahead) and only ever gain bits; a crash can cause false
   *   "probable" routes to the authoritative join, never a false
@@ -25,7 +26,7 @@ import graft.functions.{BloomBank, BloomBankProbe}
   * - Saturation is per bucket: an over-capacity bucket's bank entry is
   *   null and probes `true`; every other bucket stays live.
   * - The probe is ONE codegen expression over a torrent-broadcast
-  *   [[BloomBank]] ([[probeColumn]]) — plans carry a handle, not bytes.
+  *   [[BloomBank]] ([[probeFn]]) — plans carry a handle, not bytes.
   */
 private[streaming] object BloomSidecar {
 
@@ -62,7 +63,7 @@ private[streaming] object BloomSidecar {
     * The FIXED `numBuckets`-way repartition is deliberate, unlike the
     * coalescable rebalances that stage the ingest writes: it keeps each
     * bucket alone in its task, so a task builds one sketch (up to ~10 MB
-    * at `CorpusIngest.MaxBucketCapacity` on the index-sized [[rebuild]]
+    * at the store's `MaxBucketCapacity` on the index-sized [[rebuild]]
     * path) and at most `numBuckets` sketches reach the driver. Coalescing
     * would put several buckets' sketches in one task's memory at once; a
     * count-free variant saved a median 1.9% of ingest CPU on the
@@ -260,17 +261,12 @@ private[streaming] object BloomSidecar {
       pops.withDefaultValue(0L), blooms))
   }
 
-  /** The codegen probe over a broadcast bank — see [[BloomBankProbe]].
-    * `bucket`/`key` MUST be the same expressions the bank was built by.
-    */
-  def probeColumn(s: SparkSession, st: State, numBuckets: Int,
-      bucket: Column, key: Column): Column =
-    probeFn(s, st, numBuckets)(bucket, key)
-
-  /** Probe FACTORY over one shared broadcast bank (r13): a batch that
-    * probes the sketches in two plan shapes — e.g. a scalar any-band
-    * column inside an aggregate AND an exploded (band,bh) filter —
-    * would otherwise torrent-broadcast the same bank once per shape.
+  /** The codegen probe — see [[BloomBankProbe]] — as a FACTORY over one
+    * shared broadcast bank (r13): a batch that probes the sketches in two
+    * plan shapes — e.g. a scalar any-band column inside an aggregate AND
+    * an exploded (band,bh) filter — would otherwise torrent-broadcast the
+    * same bank once per shape. `bucket`/`key` MUST be the same
+    * expressions the bank was built by.
     */
   def probeFn(s: SparkSession, st: State,
       numBuckets: Int): (Column, Column) => Column = {

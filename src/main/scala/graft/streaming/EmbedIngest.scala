@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.storage.StorageLevel
@@ -31,7 +30,8 @@ import graft.functions.VectorFns.dot
   * approximation is band recall.
   *
   * Storage, probe plan, bloom sidecar and the lifecycle verbs are the
-  * shared [[LshIndex]] store: `kind='v'` rows carry (vec_id, label,
+  * shared [[IndexStore]] and its [[LshIndex]] probe/verify layer:
+  * `kind='v'` rows carry (vec_id, label,
   * embedding, nrm, fp, first_batch). Within-batch NEAR-dups are not
   * collapsed (matching [[FuzzyIngest]]'s default). Zero-norm, non-finite
   * (NaN/±Inf element), or null/empty embeddings are dropped at ingest (a
@@ -133,16 +133,9 @@ object EmbedIngest extends LshIndex(kind = "embed", idCol = "vec_id",
   /** Sign-LSH fingerprints (degenerate rows dropped in the kernel), then
     * within-batch EXACT dedup (min vec_id per (fp, embedding) group).
     */
-  private[graft] def signBatch(batch: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("fp"), col("embedding")).orderBy(col("vec_id"))
-    val wAll = Window.partitionBy(col("fp"), col("embedding"))
-    fingerprints(batch)
-      .withColumn("__rn", row_number().over(w))
-      .withColumn("__grp", count(lit(1)).over(wAll))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
+  private[graft] def signBatch(batch: DataFrame): DataFrame =
+    firstPerKey(fingerprints(batch), Seq("fp", "embedding"), "vec_id")
       .persist(StorageLevel.MEMORY_AND_DISK)
-  }
 
   /** One embed ingest merge — batch columns `(vec_id, embedding, label)`.
     * `preSigned`: a [[preSign]] result for THIS batch. `docsIn` counts the
@@ -151,7 +144,7 @@ object EmbedIngest extends LshIndex(kind = "embed", idCol = "vec_id",
   private[graft] def ingestBatch(batch: DataFrame, batchId: Long,
       indexDir: String, simThreshold: Double = 0.99,
       preSigned: Option[DataFrame] = None): Unit =
-    ingest(batch, batchId, indexDir, simThreshold, preSigned, None)
+    lshIngest(batch, batchId, indexDir, simThreshold, preSigned, None)
 
   /** Streaming entry — foreachBatch over [[ingestBatch]]. */
   def embedIngest(vecs: DataFrame, indexDir: String, checkpointDir: String,

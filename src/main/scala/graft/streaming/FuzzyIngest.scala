@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.storage.StorageLevel
@@ -16,7 +15,8 @@ import graft.operators.Dedup
   * index has ever seen, signature-verified against only the CANDIDATE
   * historical docs, and the surviving (genuinely new) docs' signatures
   * and bands are appended. Storage, probe plan, bloom sidecar and the
-  * lifecycle verbs are the shared [[LshIndex]] store: `kind='s'` rows
+  * lifecycle verbs are the shared [[IndexStore]] and its [[LshIndex]]
+  * probe/verify layer: `kind='s'` rows
   * carry (doc_id, lang, minhash[32], first_batch) — signatures live ONCE
   * per doc (32×8 bytes), the band rows carry only (hash, id) pairs, never
   * text bodies.
@@ -86,27 +86,17 @@ object FuzzyIngest extends LshIndex(kind = "fuzzy", idCol = "doc_id",
     signed.join(drop, Seq("doc_id"), "left_anti")
   }
 
-  /** Orderly writer-lease handover — the [[CorpusIngest.releaseWriterLease]]
-    * twin for the fuzzy index dir.
-    */
-  def releaseWriterLease(s: SparkSession, indexDir: String): Unit =
-    IngestPaths.releaseLease(s, indexDir)
-
   /** Within-batch EXACT dedup (min doc_id per (xxhash64, len) text group,
     * null ids dropped at the door — ADVICE r13: a null-id doc would be an
     * unretractable, merge-invisible row), then minhash signatures with
     * lang/__grp carried through the kernel 1:1.
     */
   private[graft] def signBatch(batch: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("__h"), col("__len")).orderBy(col("doc_id"))
-    val wAll = Window.partitionBy(col("__h"), col("__len"))
-    val uniq = batch
-      .filter(col("doc_id").isNotNull)
-      .withColumn("__h", xxhash64(coalesce(col("text"), lit(""))))
-      .withColumn("__len", coalesce(length(col("text")), lit(-1)))
-      .withColumn("__rn", row_number().over(w))
-      .withColumn("__grp", count(lit(1)).over(wAll))
-      .filter(col("__rn") === 1)
+    val uniq = firstPerKey(batch
+        .filter(col("doc_id").isNotNull)
+        .withColumn("__h", xxhash64(coalesce(col("text"), lit(""))))
+        .withColumn("__len", coalesce(length(col("text")), lit(-1))),
+        Seq("__h", "__len"), "doc_id")
       .select(col("doc_id"), col("lang"), col("text"), col("__grp"))
     Dedup
       .minhashSignatures(uniq, "text", "doc_id", NumHashes, NumBands,
@@ -134,6 +124,6 @@ object FuzzyIngest extends LshIndex(kind = "fuzzy", idCol = "doc_id",
       indexDir: String, simThreshold: Double = 0.5,
       collapseWithinBatch: Boolean = false,
       preSigned: Option[DataFrame] = None): Unit =
-    ingest(batch, batchId, indexDir, simThreshold, preSigned,
+    lshIngest(batch, batchId, indexDir, simThreshold, preSigned,
       if (collapseWithinBatch) Some(collapseBatch(_, simThreshold)) else None)
 }

@@ -56,11 +56,6 @@ private[streaming] object IngestPaths {
     None
   }
 
-  /** Per-bucket bloom capacity for a new state dir's sidecar. */
-  def defaultCapacity(s: SparkSession): Long =
-    s.conf.getOption(CorpusIngest.CapacityConf).map(_.toLong)
-      .getOrElse(CorpusIngest.DefaultBucketCapacity)
-
   // ---------------------------------------------------------------------
   // Compaction intent log — shared by every ingest pipeline
   // ---------------------------------------------------------------------

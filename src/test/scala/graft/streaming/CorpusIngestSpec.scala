@@ -431,7 +431,7 @@ class CorpusIngestSpec extends SparkSpec {
     CorpusIngest.releaseWriterLease(spark, dir)
     // simulate a foreign writer that crashed (or is live) mid-compact:
     // its intent marker is pending and its lease file present
-    CorpusIngest.writeCompactMarker(spark, dir, 0L)
+    IngestPaths.writeMarker(spark, dir, 0L)
     val leaseP = IngestPaths.leasePath(dir)
     val fs = leaseP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def plant(ageMs: Long): Unit = {
@@ -501,8 +501,10 @@ class CorpusIngestSpec extends SparkSpec {
       .withColumn("__h", xxhash64(col("text")))
       .withColumn("__len", length(col("text")))
       .write.parquet(probeSrc)
+    val probe = BloomSidecar.probeFn(s2, st, CorpusIngest.ManifestBuckets)
     val planStr = s2.read.parquet(probeSrc)
-      .filter(CorpusIngest.probeColumn(s2, st))
+      .filter(probe(pmod(hash(col("__h"), col("__len")),
+        lit(CorpusIngest.ManifestBuckets)).cast("int"), col("__h")))
       .queryExecution.executedPlan.toString
     assert(planStr.contains("bloom_bank_might_contain"),
       s"probe must be the broadcast bloom-bank expression:\n$planStr")
@@ -531,6 +533,11 @@ class CorpusIngestSpec extends SparkSpec {
     val e = intercept[IllegalStateException](
       CorpusIngest.ingestBatch(docs((2L, "beta", "en")), 1L, dir))
     assert(e.getMessage.contains("older graft version"), e.getMessage)
+    // the read has the one shape every kind's read has: a manifest
+    // without first_batch is refused there too, never served
+    val r = intercept[org.apache.spark.sql.AnalysisException](
+      CorpusIngest.manifest(spark, dir).collect())
+    assert(r.getMessage.contains("first_batch"), r.getMessage)
   }
 
   test("per-batch progress events: docs in, suppressed, appended, bloom routing") {
@@ -575,7 +582,7 @@ class CorpusIngestSpec extends SparkSpec {
     // crash point A — earliest: compact durably recorded its intent and
     // died before touching ANY state. The next manifest() read completes
     // the whole compaction before serving.
-    CorpusIngest.writeCompactMarker(s2, dir, 1L)
+    IngestPaths.writeMarker(s2, dir, 1L)
     assert(manifestSet() === expected,
       "roll-forward must yield exactly the compacted rows, no duplicates")
     assert(partitions() === Set(s"batch=${CorpusIngest.CompactedBatch}", "batch=2"),
@@ -586,13 +593,13 @@ class CorpusIngestSpec extends SparkSpec {
     // crash point B — latest: everything done, marker not yet cleared.
     // Re-running the body over already-compacted state must converge
     // (consolidation re-reads the consolidated partition and dedups).
-    CorpusIngest.writeCompactMarker(s2, dir, 1L)
+    IngestPaths.writeMarker(s2, dir, 1L)
     assert(manifestSet() === expected, "re-rolled compaction must converge")
     assert(!fs.exists(IngestPaths.markerPath(dir)))
 
     // and the heal also runs on the MERGE path: a pending marker plus an
     // arriving batch → reconcile rolls forward first, then ingests
-    CorpusIngest.writeCompactMarker(s2, dir, 1L)
+    IngestPaths.writeMarker(s2, dir, 1L)
     CorpusIngest.ingestBatch(docs2((30L, "alpha", "fr"), (31L, "zeta", "en")), 3L, dir)
     assert(!fs.exists(IngestPaths.markerPath(dir)))
     assert(manifestSet() === expected + ((3L, 31L)),
@@ -607,7 +614,7 @@ class CorpusIngestSpec extends SparkSpec {
   test("every batch partition holds at most ManifestBuckets part files") {
     val s2 = WriteLayout.manyTaskSession(spark)
     val dir = graft.util.Scratch.fresh("ingest_file_floor")
-    // batch 0 lands through saveAsTable, batches 1 and 2 through the
+    // every batch, the first included, lands through the staged
     // static-partition INSERT OVERWRITE
     val tasks = WriteLayout.writeTasks(s2, new java.io.File(dir).getName)(
       (0 until 3).foreach(b =>

@@ -11,7 +11,7 @@ import graft.SparkSpec
   * survives), positive-rescale fingerprint invariance, degenerate-row
   * drops, idempotent replay, and the streaming leg.
   */
-class EmbedIngestSpec extends SparkSpec {
+class EmbedIngestSpec extends SparkSpec with IndexKinds {
   import spark.implicits._
 
   private def unit(i: Int): Array[Float] = {
@@ -98,18 +98,7 @@ class EmbedIngestSpec extends SparkSpec {
   }
 
   test("an all-dropped first batch leaves no index; the next batch starts it") {
-    // existence is "a part- file under idx" (the fuzzy/corpus rule): the
-    // first batch's empty insert must not register a data-less index
-    val dir = graft.util.Scratch.fresh("embed_empty_first")
-    EmbedIngest.ingestBatch(vecs((1L, Array.fill(8)(0.0f), 0),
-      (2L, null.asInstanceOf[Array[Float]], 0)), 0L, dir)
-    EmbedIngest.ingestBatch(vecs((3L, unit(0), 0)), 1L, dir)
-    EmbedIngest.ingestBatch(vecs(
-      (4L, unit(0).map(_ * 1.01f), 0), (5L, unit(4), 4)), 2L, dir)
-    val idx = EmbedIngest.index(spark, dir)
-      .select(col("batch").cast("long"), col("vec_id"))
-      .as[(Long, Long)].collect().toSet
-    assert(idx == Set((1L, 3L), (2L, 5L)), s"index after an empty first batch: $idx")
+    allDroppedFirstBatch(embed)
   }
 
   test("a legacy two-table (vecs+bands) index dir is rejected with a clear error") {

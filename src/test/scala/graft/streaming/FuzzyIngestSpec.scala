@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -8,11 +7,12 @@ import graft.SparkSpec
 /** Incremental fuzzy-dedup index semantics: cross-batch NEAR-dup
   * suppression (the case the exact manifest cannot see), unrelated docs
   * passing through, idempotent replay, and the bucket-local probe plan.
-  * The specs about the shared [[LshIndex]] store — probe plan, crashed
-  * compaction, roll-forward lease — run over both kinds; their embed
-  * cases carry an " (embed)" suffix.
+  * The specs about the shared store run over several kinds
+  * ([[IndexKinds]]): the LSH probe plan over both LSH kinds, the crashed
+  * compaction, the roll-forward lease and the all-dropped first batch
+  * over every kind; their other-kind cases carry a " (<kind>)" suffix.
   */
-class FuzzyIngestSpec extends SparkSpec {
+class FuzzyIngestSpec extends SparkSpec with IndexKinds {
   import spark.implicits._
 
   // long texts so a one-token edit stays far above the 0.5 agreement bar
@@ -22,40 +22,6 @@ class FuzzyIngestSpec extends SparkSpec {
 
   private def docs(rows: (Long, String, String)*) =
     rows.toDF("doc_id", "text", "lang")
-
-  /** One index kind for the specs both kinds run: `rows` builds a batch
-    * of (id, item) — items 0-4 pairwise dissimilar, item [[NearA]] a
-    * near-dup of item 0 that the index must suppress.
-    */
-  private case class Kind(suffix: String, idx: LshIndex,
-      rows: (SparkSession, Seq[(Long, Int)]) => DataFrame,
-      ingest: (DataFrame, Long, String) => Unit) {
-    def put(batchId: Long, dir: String, items: (Long, Int)*): Unit =
-      ingest(rows(spark, items), batchId, dir)
-    def indexSet(s: SparkSession, dir: String): Set[(Long, Long)] = {
-      val df = idx.index(s, dir)
-      df.select(col("batch").cast("long"), col(df.columns.head))
-        .as[(Long, Long)].collect().toSet
-    }
-  }
-  private val NearA = 5
-  private val fuzzy = {
-    val texts = Seq(baseA, baseB, baseC, "tiny unrelated text here",
-      "another tiny doc", baseA.replace("alpha7", "edited"))
-    Kind("", FuzzyIngest, (s, items) => {
-      import s.implicits._
-      items.map { case (id, i) => (id, texts(i), "en") }.toDF("doc_id", "text", "lang")
-    }, FuzzyIngest.ingestBatch(_, _, _))
-  }
-  private val embed = {
-    def unit(i: Int) = { val v = Array.fill(8)(0.0f); v(i) = 1.0f; v }
-    // a positive rescale keeps every sign bit: a guaranteed band hit
-    val vecs = (0 until NearA).map(unit) :+ unit(0).map(_ * 1.01f)
-    Kind(" (embed)", EmbedIngest, (s, items) => {
-      import s.implicits._
-      items.map { case (id, i) => (id, vecs(i), 0) }.toDF("vec_id", "embedding", "label")
-    }, EmbedIngest.ingestBatch(_, _, _))
-  }
 
   test("near-dups of earlier batches are suppressed; new docs survive") {
     val dir = graft.util.Scratch.fresh("fuzzy_ingest_spec")
@@ -107,7 +73,7 @@ class FuzzyIngestSpec extends SparkSpec {
   }
 
   for (k <- Seq(fuzzy, embed))
-    test(s"LSH probe ships the BATCH side: NO exchange on the band-index side${k.suffix}") {
+    test(s"LSH probe ships the BATCH side: NO exchange on the band-index side${k.suffix(fuzzy)}") {
       // r14 single-table contract: the probe broadcasts the (micro-batch
       // bounded) new bands, the kind='b' partition slice scans with no
       // shuffle and no sort — partition pruning must reach the scan so a
@@ -248,8 +214,8 @@ class FuzzyIngestSpec extends SparkSpec {
     assert(ids === Set(1L, 10L))
   }
 
-  for (k <- Seq(fuzzy, embed))
-    test(s"roll-forward takes the lease: a live foreign writer blocks the reader (twin)${k.suffix}") {
+  for (k <- Seq(fuzzy, embed, corpus))
+    test(s"roll-forward takes the lease: a live foreign writer blocks the reader (twin)${k.suffix(fuzzy)}") {
       // CorpusIngest twin of the r12 roll-forward lease rule on the LSH
       // index: index() hitting a pending marker under a LIVE foreign lease
       // must refuse rather than interleave a second consolidation
@@ -265,7 +231,7 @@ class FuzzyIngestSpec extends SparkSpec {
         s"owner=other-writer\nts=${System.currentTimeMillis()}\n".getBytes("UTF-8"))
       finally out.close()
       val e = intercept[IllegalStateException](
-        k.idx.index(spark, dir).collect())
+        k.read(spark, dir).collect())
       assert(e.getMessage.contains("other-writer"), e.getMessage)
       // stale lease → stolen, rolled forward, served — marker cleared
       spark.conf.set(IngestPaths.LeaseTtlConf, "50")
@@ -439,8 +405,8 @@ class FuzzyIngestSpec extends SparkSpec {
     assert(ev.bloomProbable >= 1L && ev.suppressed === 1L, ev.line)
   }
 
-  for (k <- Seq(fuzzy, embed))
-    test(s"a crashed compact is rolled forward before any read or merge (intent log)${k.suffix}") {
+  for (k <- Seq(fuzzy, embed, corpus))
+    test(s"a crashed compact is rolled forward before any read or merge (intent log)${k.suffix(fuzzy)}") {
       val dir = graft.util.Scratch.fresh("fuzzy_crash_compact_spec")
       k.put(0L, dir, 1L -> 0, 2L -> 1)
       k.put(1L, dir, 10L -> 2)
@@ -455,7 +421,7 @@ class FuzzyIngestSpec extends SparkSpec {
       assert(k.indexSet(spark, dir) === expected,
         "roll-forward must yield exactly the compacted index, no duplicates")
       assert(!fs.exists(IngestPaths.markerPath(dir)), "marker must be cleared")
-      val partsAfter = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/idx"))
+      val partsAfter = fs.listStatus(new org.apache.hadoop.fs.Path(k.tableDir(dir)))
         .filter(_.isDirectory).map(_.getPath.getName)
         .filter(_.startsWith("batch=")).toSet
       assert(partsAfter === Set(s"batch=${CorpusIngest.CompactedBatch}", "batch=2"),
@@ -470,16 +436,10 @@ class FuzzyIngestSpec extends SparkSpec {
         "post-heal ingest must suppress near-dups of compacted items")
     }
 
-  test("an all-dropped first batch leaves no index; the next batch starts it") {
-    // existence is "a part- file under idx": the first batch's empty
-    // insert must not register a data-less index the next batch probes
-    val dir = graft.util.Scratch.fresh("fuzzy_empty_first_spec")
-    FuzzyIngest.ingestBatch(Seq((Option.empty[Long], baseA, "en"))
-      .toDF("doc_id", "text", "lang"), 0L, dir)
-    fuzzy.put(1L, dir, 1L -> 0)
-    fuzzy.put(2L, dir, 20L -> NearA, 21L -> 2)
-    assert(fuzzy.indexSet(spark, dir) === Set((1L, 1L), (2L, 21L)))
-  }
+  for (k <- Seq(fuzzy, corpus))
+    test(s"an all-dropped first batch leaves no index; the next batch starts it${k.suffix(fuzzy)}") {
+      allDroppedFirstBatch(k)
+    }
 
   // unrelated docs (no shared tokens), so every row of every batch survives
   private def distinctDocs(s: org.apache.spark.sql.SparkSession, batch: Int, n: Int) =

@@ -274,17 +274,17 @@ object LlmQueries {
     // 2-grams): the asymmetric measure that catches a doc (nearly)
     // embedded in a larger one — Jaccard structurally misses those, and
     // the length-bucket blocking of llm_dedup_ngram would veto exactly
-    // these pairs. Candidate generation is the EXACT-recall prefix-filter
-    // inverted index (rarest-gram prefix postings ⋈ full postings, shared
-    // with llm_dedup_ngram — candidates ⊇ results by the SSJoin prefix
-    // theorem; never an all-pairs corpus self-join within a (lang,
-    // source) block), verified with the codegen'd sorted-merge intersect
-    // — see Dedup.containmentPairsIndexed, and DedupSpec for the
-    // equivalence pin against the all-pairs twin. The sampled
-    // winnowing-fingerprint candidate path with the MOSS ≥5-token-run
-    // recall contract lives in Dedup.containmentPairsWinnow (kept as the
-    // cheaper approximate alternative; rejected for THIS oracled query
-    // because its recall is span-conditional, not exact).
+    // these pairs. Candidates come from the one exact prefix-filter
+    // similarity join llm_dedup_ngram and llm_dedup_fuzzy also run
+    // (rarest-gram prefix postings ⋈ full postings — candidates ⊇
+    // results by the SSJoin prefix theorem; never an all-pairs corpus
+    // self-join within a (lang, source) block), here with the
+    // containment measure and no length filter, verified with the
+    // codegen'd sorted-merge intersect — see
+    // Dedup.containmentPairsIndexed, and DedupSpec for the equivalence
+    // pin against the all-pairs twin. A winnowing-fingerprint candidate
+    // path was measured and dropped: its recall is span-conditional
+    // (shared ≥5-token runs), not exact.
     "llm_dedup_containment" -> ((s, d) =>
       Dedup.containmentPairsIndexed(Tables.documents(s, d), n = 2,
           threshold = 0.2)
@@ -405,22 +405,16 @@ object LlmQueries {
         .select(col("a_id"), col("b_id")).cache()
       // exact pairs through the SAME token-set gate minhashPairs verifies
       // with — the denominator of the full-pipeline recall. Token sets as
-      // sorted FNV hashes + the compiled sorted-merge intersect (same
+      // sorted FNV hashes through the shared Jaccard verify
+      // (Dedup.verifyPairs: the compiled sorted-merge intersect, the
+      // >= 0.5 filter on the unrounded score; same
       // `split(" ", -1)` tokenization as the SQL-split verify path;
       // identical J modulo the declared 64-bit gram-collision bound) —
       // interpreted array_intersect/union HOFs would become the hot path
       // before the SSJoin does if the true pair count ever grows
       val tokenSets = Dedup.slimGramSets(
         docs.select(col("doc_id"), col("text")), n = 1)
-      val common = graft.functions.SortedIntersectCount(col("ga"), col("gb"))
-      val gated = exact
-        .join(tokenSets.withColumnRenamed("doc_id", "a_id")
-          .withColumnRenamed("grams", "ga"), "a_id")
-        .join(tokenSets.withColumnRenamed("doc_id", "b_id")
-          .withColumnRenamed("grams", "gb"), "b_id")
-        .withColumn("__c", common)
-        .filter(col("__c").cast("double") /
-          (size(col("ga")) + size(col("gb")) - col("__c")).cast("double") >= 0.5)
+      val gated = Dedup.verifyPairs(exact, tokenSets, Dedup.Jaccard, 0.5)
         .select(col("a_id"), col("b_id"))
       // .distinct() so the one-action left-join fold below cannot
       // overcount vs the former left_semi under duplicate verified

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -408,8 +408,8 @@ object Dedup {
     a.join(b, col("a.lang") === col("b.lang") && col("a.source") === col("b.source") &&
         col("a.len_bkt") === col("b.len_bkt") && col("a.doc_id") < col("b.doc_id"))
       .withColumn("common", common)
-      .withColumn("jaccard", col("common").cast("double") /
-        (size(col("a.grams")) + size(col("b.grams")) - col("common")).cast("double"))
+      .withColumn("jaccard",
+        Jaccard.score(col("common"), size(col("a.grams")), size(col("b.grams"))))
       .filter(col("jaccard") >= threshold)
       .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
         graft.functions.Rounding.roundTo(col("jaccard"), 4).as("jaccard"))
@@ -430,12 +430,9 @@ object Dedup {
     *
     * This all-pairs-within-block form is quadratic in block size — the
     * SMALL-CORPUS / parity-twin variant. The shipped scale path is
-    * [[containmentPairsIndexed]], whose candidate generation is the EXACT
-    * prefix-filter inverted index (the winnowing index was measured and
-    * rejected for this operator — see that method's doc); this form
-    * exists as its ground-truth twin for equivalence tests and for
-    * corpora small enough that building the index costs more than the
-    * pairs.
+    * [[containmentPairsIndexed]]; this form exists as its ground-truth
+    * twin for equivalence tests and for corpora small enough that
+    * building the index costs more than the pairs.
     */
   def containmentPairs(docs: DataFrame, n: Int,
       threshold: Double): DataFrame = {
@@ -446,55 +443,176 @@ object Dedup {
         col("a.source") === col("b.source") &&
         col("a.doc_id") < col("b.doc_id"))
       .withColumn("common", common)
-      .withColumn("containment", col("common").cast("double") /
-        least(size(col("a.grams")), size(col("b.grams"))).cast("double"))
+      .withColumn("containment",
+        Containment.score(col("common"), size(col("a.grams")), size(col("b.grams"))))
       .filter(col("containment") >= threshold)
       .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
         graft.functions.Rounding.roundTo(col("containment"), 4)
           .as("containment"))
   }
 
-  /** Containment pairs with PREFIX-FILTERED candidate generation — the
-    * 100 TB form of [[containmentPairs]] with EXACT recall (candidates ⊇
-    * results by theorem, not empirically): same output contract, same
-    * sorted-merge verify kernel, sub-quadratic candidates, no corpus
-    * self-join on the block key.
+  /** [[containmentPairs]] through the prefix-filter join
+    * ([[similarityJoin]]): same output contract, exact recall,
+    * sub-quadratic candidates, no corpus self-join on the block key.
+    * Blocked on (lang, source); the length filter stays off (the
+    * measure exists for small-inside-large pairs).
+    *
+    * An alternative candidate path via a winnowing index was measured and
+    * REJECTED for this operator: winnowing guarantees shared RUNS
+    * (>= w+n−1 consecutive tokens), and 10 of 36 sf0.001 pairs have
+    * purely scattered overlap — 28% recall loss vs this exact scheme.
+    *
+    * EAGER past ~32M postings (see [[similarityJoin]]).
+    */
+  def containmentPairsIndexed(docs: DataFrame, n: Int,
+      threshold: Double,
+      candPostsPerPass: Long = defaultSsjPostsPerPass,
+      stageDir: Option[String] = None,
+      pairsPerVerifyPass: Long = defaultSsjPairsPerPass): DataFrame =
+    similarityJoin(gramSets(docs, n, charBucket = 1).drop("len_bkt"),
+      Seq("lang", "source"), Containment, threshold, positional = false,
+      candPostsPerPass, stageDir, pairsPerVerifyPass)
+
+  /** [[ngramJaccardPairs]] through the prefix-filter join
+    * ([[similarityJoin]]) — same output contract (including the (lang,
+    * source, len_bkt) blocking the oracle twin declares), exact recall,
+    * sub-quadratic within blocks. The length bucket stays PART OF THE
+    * SEMANTICS (near-equal-length blocking is the operator's declared
+    * recall trade); what changes is that within a block candidates come
+    * from the inverted prefix index instead of an all-pairs join, so a
+    * hot (lang, source, len_bkt) block no longer goes quadratic.
+    *
+    * EAGER past ~32M postings (see [[similarityJoin]]).
+    */
+  def ngramJaccardPairsIndexed(docs: DataFrame, n: Int, charBucket: Int,
+      threshold: Double,
+      candPostsPerPass: Long = defaultSsjPostsPerPass,
+      stageDir: Option[String] = None,
+      pairsPerVerifyPass: Long = defaultSsjPairsPerPass): DataFrame =
+    similarityJoin(gramSets(docs, n, charBucket),
+      Seq("lang", "source", "len_bkt"), Jaccard, threshold,
+      positional = false, candPostsPerPass, stageDir, pairsPerVerifyPass)
+
+  /** EXACT `n`-token-shingle Jaccard near-dup pairs over the WHOLE
+    * corpus (no blocking) — the deterministic ground-truth twin of the
+    * MinHash-LSH family. The shingle set is EXACTLY what
+    * [[minhashSignatures]] sketches (distinct `n`-token shingles of the
+    * `' '`-split tokens), so this is the quantity a minhash agreement
+    * fraction ESTIMATES; what differs is candidate generation: instead
+    * of LSH band buckets (hash-family-specific, recall < 1 by
+    * construction) candidates come from [[similarityJoin]] with an
+    * EMPTY block list — the Chaudhuri/Bayardo prefix-filter bound holds
+    * corpus-wide, so the pair set is exactly
+    * `{ (a,b) : J(shingles(a), shingles(b)) >= threshold }` with no
+    * hash-family dependence (modulo the declared per-pair 64-bit
+    * gram-collision bound — see [[Fnv64Offset]]).
+    *
+    * This is what lets the MinHash family graduate from rows-only to
+    * hash-oracled (late r12, the IVF verdict pattern): the hashed surface of
+    * `llm_dedup_fuzzy`/`_keep`/`_incremental` is built from THIS exact
+    * pair set (DuckDB twin = brute-force `list_intersect` Jaccard at
+    * oracle scale), while the LSH pipeline still runs in the same plan
+    * and its recall against this set is pinned by a verdict column.
+    *
+    * Needs only `(doc_id, text)` on the input (unlike [[gramSets]], so
+    * the streaming replay's constructed batches can use it); null-text
+    * docs are dropped, mirroring the blocked family and the
+    * `string_split(NULL)` twin. Positional (PPJoin) pruning is on: with
+    * no block bound, candidates explode without it.
+    *
+    * EAGER past ~32M postings (see [[similarityJoin]]).
+    */
+  def shingleJaccardPairsGlobal(docs: DataFrame, n: Int,
+      threshold: Double,
+      candPostsPerPass: Long = defaultSsjPostsPerPass,
+      stageDir: Option[String] = None,
+      pairsPerVerifyPass: Long = defaultSsjPairsPerPass): DataFrame =
+    similarityJoin(slimGramSets(docs, n), Seq.empty, Jaccard, threshold,
+      positional = true, candPostsPerPass, stageDir, pairsPerVerifyPass)
+
+  /** A set-similarity measure of the prefix-filter join: its output
+    * column, its score over `(|A∩B|, |A|, |B|)`, whether the AllPairs
+    * length filter applies, and the PPJoin overlap bound — the least
+    * `|A∩B|` a pair of sizes `(szx, szy)`, szx ≤ szy, needs to reach τ.
+    */
+  private[graft] final case class Measure(name: String,
+      lengthFilter: Boolean,
+      score: (Column, Column, Column) => Column,
+      minOverlap: (Column, Column, Double) => Column)
+
+  /** |A∩B| / |A∪B|. Length filter on: with |A| ≤ |B|,
+    * J ≤ |A|/|B|, so τ·|B| > |A| already implies J < τ. Overlap bound
+    * o ≥ τ/(1+τ)·(|A|+|B|).
+    */
+  private[graft] val Jaccard = Measure("jaccard", lengthFilter = true,
+    (c, a, b) => c.cast("double") / (a + b - c).cast("double"),
+    (x, y, t) =>
+      ceil((x + y).cast("double") * lit(t / (1.0 + t)) - lit(1e-9)))
+
+  /** |A∩B| / min(|A|,|B|). Length filter OFF: the measure's whole point
+    * is small-doc-inside-large-doc pairs at unbounded size ratio.
+    * Overlap bound o ≥ τ·|A|.
+    */
+  private val Containment = Measure("containment", lengthFilter = false,
+    (c, a, b) => c.cast("double") / least(a, b).cast("double"),
+    (x, _, t) => ceil(x.cast("double") * lit(t) - lit(1e-9)))
+
+  /** The exact prefix-filter set-similarity join behind every indexed
+    * pair operator: `(a_id, b_id, <m.name>)` for each pair of docs in
+    * `grams` (`doc_id`, `blockCols`, sorted distinct `grams`) that agree
+    * on `blockCols` (null-rejecting `===`, matching the all-pairs twins)
+    * and score `>= threshold` under `m`.
     *
     * Prefix filtering (the SSJoin / AllPairs / PPJoin family —
     * Chaudhuri et al. ICDE'06, Bayardo et al. WWW'07): rank every doc's
     * grams in one GLOBAL canonical order (ascending document frequency,
-    * ties by gram hash — rarest first). For a pair with
-    * |A∩B| / min(|A|,|B|) >= τ and |A| <= |B|, the overlap is at least
-    * o = ⌈τ·|A|⌉; if none of the first |A| − o + 1 grams of A (its
-    * "prefix") occurred in B, all shared grams would sit in A's last
-    * o − 1 positions — fewer than o, contradiction. So joining only
-    * PREFIX postings of the smaller side against full postings of the
-    * larger side finds every qualifying pair. An alternative candidate
-    * path via the winnowing index was measured and REJECTED for this
-    * operator: winnowing guarantees shared RUNS (>= w+n−1 consecutive
-    * tokens), and 10 of 36 sf0.001 pairs have purely scattered overlap —
-    * 28% recall loss vs this exact scheme ([[containmentPairsWinnow]]
-    * keeps that form for run-shaped duplication where its sparser index
-    * is worth the trade).
+    * ties by gram hash — rarest first). One overlap bound serves BOTH
+    * measures at equal τ: for |A| ≤ |B|, containment ≥ τ gives
+    * |A∩B| ≥ ⌈τ·|A|⌉ directly, and Jaccard ≥ τ gives
+    * |A∩B| ≥ τ·|A∪B| ≥ τ·|B| ≥ τ·|A|. If none of the first
+    * |A| − o + 1 grams of A (its "prefix") occurred in B, all shared
+    * grams would sit in A's last o − 1 positions — fewer than o,
+    * contradiction. So joining only PREFIX postings of the smaller side
+    * against full postings of the larger side finds every qualifying
+    * pair (candidates ⊇ results by theorem, not empirically).
     *
     * Why hot grams don't explode the candidate join: the join key is a
     * PREFIX gram — by construction among the rarest of its doc. A gram
     * with huge df lands in a prefix only when a doc consists almost
-    * entirely of high-df grams (pure-boilerplate docs); the df ordering
-    * pushes every such gram to the suffix of any doc that has even one
-    * rarer gram. Residual worst case (a block of near-identical
-    * boilerplate docs) degrades toward the true pair count — which is
-    * itself quadratic there, so the candidates are output-bounded; AQE
-    * skew splitting handles the bucket (AqeSkewJoinSpec pins the
-    * mechanism).
+    * entirely of high-df grams (pure-boilerplate docs). Residual worst
+    * case (a block of near-identical boilerplate docs) degrades toward
+    * the true pair count — itself quadratic there, so the candidates are
+    * output-bounded; AQE skew splitting handles the bucket
+    * (AqeSkewJoinSpec pins the mechanism).
     *
-    * Cost shape at 100 TB: postings explode (linear in corpus grams),
-    * one groupBy(gram) for df (map-side combinable), one join
-    * postings⋈df on gram, one per-doc window (shuffle on doc_id) to cut
-    * prefixes, then the prefix⋈postings candidate join and the verify
-    * hash-joins — all linear-ish shuffles except the candidate join,
-    * whose output is output-bounded as argued. ~(1−τ)·grams prefix
-    * postings per doc.
+    * df=1 pruning (r15): a unique gram can NEVER produce a candidate, so
+    * only df >= 2 postings flow through the ranking window and the
+    * candidate join ([[rankedPostings]] recovers the full-order prefix
+    * cut exactly). Recall unchanged: a qualifying pair's shared prefix
+    * gram has df >= 2 by definition. It is NOT a disk escape at 5M+ docs
+    * on one box — the sf100 rehearsal corpus shares most shingles WITHIN
+    * a copy, so df>=2 postings stay dominant there
+    * (BENCH_decade3_r15.json).
+    *
+    * `positional` picks the lazy branch's y side. true (the GLOBAL
+    * caller): y = the RANKED df>=2 frame, so the PPJoin filter can read
+    * y's canonical-order position — the dominant win where candidates
+    * explode (sf10 global SSJoin: 34.9M -> ~1M candidates, end-to-end
+    * 59 s -> 37 s). false (the blocked callers): y = raw postings —
+    * ranking y re-measured as a net LOSS inside small (lang, source[,
+    * len_bkt]) blocks (llm_dedup_containment 1.7 -> 2.5 s,
+    * llm_dedup_ngram 1.5 -> 1.9 s at sf0.1), where block bounds already
+    * cap the blow-up. The sharded branch stages the ranked table ONCE and
+    * reads it for both sides, so it always prunes positionally.
+    *
+    * Sizing: one cheap aggregate over the persisted gram frame
+    * ([[totalPostings]]) picks the branch. At or below
+    * `candPostsPerPass` postings (~32M by default: sf10 and below) the
+    * returned plan is the lazy one-shuffle form. Above it the join runs
+    * as [[shardedPairs]] — the form that survives 5M docs (125M
+    * candidates) on one box — and is EAGER: the whole pipeline runs at
+    * CALL time and the returned frame reads the staged result. Don't
+    * construct these frames speculatively on large corpora.
     *
     * Float-safe overlap bound: o is computed as ⌈τ·sz − 1e-9⌉ — a hair
     * SMALLER never misses (longer prefix, more candidates), while a bare
@@ -502,59 +620,32 @@ object Dedup {
     * carries float error (τ=0.2, sz=30 → 6.000000000000001 → 7), which
     * would shorten the prefix and silently drop exactly-at-threshold
     * pairs.
-    *
-    * EAGER past the posting threshold (ADVICE r17): a construction-time
-    * aggregate sizes the shards (forcing the persisted gram frame), and
-    * above ~160M postings the SHARDED branch runs the whole pipeline —
-    * candidate passes, counts, every verify pass — at CALL time and
-    * returns a reader over the staged result. Don't construct this
-    * frame speculatively on large corpora; below the threshold only the
-    * sizing aggregate runs and the returned plan is the unchanged lazy
-    * form.
     */
-  def containmentPairsIndexed(docs: DataFrame, n: Int,
-      threshold: Double,
-      candPostsPerPass: Long = defaultSsjPostsPerPass,
-      stageDir: Option[String] = None,
-      pairsPerVerifyPass: Long = defaultSsjPairsPerPass): DataFrame = {
-    val g = persistGrams(gramSets(docs, n, charBucket = 1).drop("len_bkt"))
-    def verify(cand: DataFrame, grams: DataFrame): DataFrame = {
-      val common = graft.functions.SortedIntersectCount(col("a.grams"), col("b.grams"))
-      cand
-        .join(grams.as("a"), col("a_id") === col("a.doc_id"))
-        .join(grams.as("b"), col("b_id") === col("b.doc_id"))
-        .withColumn("common", common)
-        .withColumn("containment", col("common").cast("double") /
-          least(size(col("a.grams")), size(col("b.grams"))).cast("double"))
-        .filter(col("containment") >= threshold)
-        .select(col("a_id"), col("b_id"),
-          graft.functions.Rounding.roundTo(col("containment"), 4)
-            .as("containment"))
-    }
-    // Same auto-sized disk-bounded escape as the global SSJoin (r17):
-    // blocking does not shrink the POSTING volume, so past ~160M
-    // postings the one-shuffle candidate join dies exactly the way the
-    // global form did (the r17 sf100 decade run ENOSPC'd this operator
-    // at 5M docs). Below the threshold the plan is the unchanged lazy
-    // form — blocked callers keep the raw y side there (ranking y
-    // re-measured as a net loss inside small blocks; the sharded form
-    // stages the ranked table ONCE and reads it for both sides, so the
-    // trade flips).
+  private def similarityJoin(grams: DataFrame, blockCols: Seq[String],
+      m: Measure, threshold: Double, positional: Boolean,
+      candPostsPerPass: Long, stageDir: Option[String],
+      pairsPerVerifyPass: Long): DataFrame = {
+    val g = persistGrams(grams)
     val (kProbe, kCand) = ssjShardCounts(totalPostings(g), candPostsPerPass)
-    if (kCand <= 1)
-      verify(prefixCandidates(g, Seq("lang", "source"), threshold), g)
-    else
-      shardedVerifiedPairs(g, Seq("lang", "source"), threshold,
-        jaccardLengthFilter = false, kProbe, kCand, stageDir,
-        pairsPerVerifyPass)(verify)
+    val posts = g.select(col("doc_id") +: blockCols.map(col) :+
+      size(col("grams")).as("sz") :+ explode(col("grams")).as("gram"): _*)
+    val dfreq = posts.groupBy(col("gram")).agg(count(lit(1)).as("df"))
+    val posts2 = posts.join(dfreq.filter(col("df") >= 2), "gram")
+    if (kCand <= 1) {
+      val ranked = rankedPostings(posts2, blockCols, threshold)
+      val y = if (positional) ranked.drop("in_prefix") else posts
+      verifyPairs(candidateJoin(ranked, y, blockCols, m, threshold, positional),
+        g, m, threshold)
+    } else
+      shardedPairs(g, posts2, blockCols, m, threshold, kProbe, kCand,
+        stageDir, pairsPerVerifyPass)
   }
 
-  /** Persist a gram-kernel frame ([[gramSets]] / [[winnowIndex]])
-    * consumed by multiple plan subtrees.
+  /** Persist the gram frame a [[similarityJoin]] consumes.
     *
-    * The indexed pair generators reference the gram frame ~5 times (df
-    * branch, full-postings side, prefix-probe side, and both verify join
-    * legs), and each reference is an independent subtree whose exchange
+    * The join references the gram frame ~5 times (df branch,
+    * full-postings side, prefix-probe side, and both verify join legs),
+    * and each reference is an independent subtree whose exchange
     * differs — ReuseExchange cannot collapse them, so without a persist
     * the tokenize+hash+sort kernel re-scans the whole corpus per
     * reference (~3 extra full-corpus passes at 100 TB). MEMORY_AND_DISK
@@ -568,84 +659,62 @@ object Dedup {
   private def persistGrams(g: DataFrame): DataFrame =
     g.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-  /** Exact-recall prefix-filtered candidate pairs over a [[gramSets]]
-    * frame, shared by [[containmentPairsIndexed]] and
-    * [[ngramJaccardPairsIndexed]]. `blockCols` must hold between the two
-    * docs of a pair (null-rejecting `===`, matching the all-pairs
-    * twins).
-    *
-    * One overlap bound serves BOTH measures at equal τ: for a pair with
-    * |A| ≤ |B|, containment ≥ τ gives |A∩B| ≥ ⌈τ·|A|⌉ directly, and
-    * Jaccard ≥ τ gives |A∩B| ≥ τ·|A∪B| ≥ τ·|B| ≥ τ·|A| — so in either
-    * case a qualifying pair shares at least ⌈τ·|A|⌉ grams, which cannot
-    * all sit in the smaller doc's o−1 suffix under the global
-    * rarest-first gram order. Hence joining the smaller side's
-    * (|A| − o + 1)-length prefix postings against full postings finds
-    * every qualifying pair (Chaudhuri et al. ICDE'06, Bayardo et al.
-    * WWW'07; the ⌈τ·sz − 1e-9⌉ form keeps an integral τ·sz from
-    * float-rounding the prefix short).
+  /** Total posting count of a gram frame — the number every auto-shard
+    * decision keys on. One cheap aggregate; the callers persist `g` and
+    * force it downstream anyway.
     */
-  private def prefixCandidates(g: DataFrame, blockCols: Seq[String],
-      threshold: Double, jaccardLengthFilter: Boolean = false,
-      positional: Boolean = false): DataFrame = {
-    val posts = g.select(col("doc_id") +: blockCols.map(col) :+
-      size(col("grams")).as("sz") :+ explode(col("grams")).as("gram"): _*)
-    val dfreq = posts.groupBy(col("gram")).agg(count(lit(1)).as("df"))
-    // df=1 pruning (r15): a unique gram can NEVER produce a candidate —
-    // no second document shares it — so ONLY df >= 2 postings need to
-    // flow through the ranking window and the candidate join. The
-    // original rank-over-ALL-grams filter (rk <= sz - ceil(tau*sz) + 1)
-    // is recovered exactly on the pruned frame: df=1 grams sort strictly
-    // FIRST under (df asc, gram asc), so a df>=2 gram's global rank is
-    // u + rk2 with u = sz - n2 unique grams ahead of it, and the cutoff
-    // becomes rk2 <= n2 - ceil(tau*sz) + 1 (sz, not n2, inside the ceil
-    // — the prefix LENGTH is defined over the full gram set). Recall
-    // unchanged: a qualifying pair's shared prefix gram has df >= 2 by
-    // definition (DedupSpec pins the pair outputs). The win scales with
-    // the vocabulary's long tail (real crawls: unique shingles dominate
-    // postings); it is NOT a disk escape for the global SSJoin at 5M+
-    // docs on ONE box — the sf100 rehearsal corpus shares most shingles
-    // WITHIN a copy, df>=2 postings stay dominant there, and the row
-    // still exceeds a single 252 GB box's free disk (the named hotspot
-    // in BENCH_decade3_r15.json; the LSH index path is the shipped
-    // scale plan).
-    val posts2 = posts.join(dfreq.filter(col("df") >= 2), "gram")
-    val ranked = rankedPostings(posts2, blockCols, threshold)
+  private def totalPostings(g: DataFrame): Long =
+    // Measured r20: do NOT skip this below the shard threshold (an
+    // input-size-derived decision looked like one job saved) — the agg
+    // doubles as the cache WARM-UP for `g`, whose verify join scans it
+    // twice in one job; skipping it re-ran the gram kernel per scan and
+    // read 10-14% SLOWER on every lazy-branch row (fuzzy 2.80 -> 3.18 s,
+    // fuzzy_keep 3.80 -> 4.34, containment 1.67 -> 1.83; anchor flat).
+    Option(g.agg(sum(size(col("grams")))).head().get(0))
+      .map(_.asInstanceOf[Long]).getOrElse(0L)
+
+  /** The candidate join both [[similarityJoin]] branches run: the
+    * `in_prefix` rows of `ranked` (x) against `y` on a shared gram,
+    * distinct `(a_id, b_id)` out with a_id < b_id.
+    *
+    * The size order `x.sz < y.sz` (ties by doc id) makes x the smaller
+    * side, so only ITS prefix needs probing. AllPairs length filter
+    * (`m.lengthFilter`, Jaccard only): τ·|B| > |A| rules the pair out,
+    * recall-preserving, with the boundary kept by the same 1e-9 guard as
+    * the prefix bound (τ·|B| = |A| exactly CAN qualify: A ⊆ B).
+    *
+    * PPJoin positional filter (`positional`, Xiao, Wang, Lin, Yu —
+    * WWW'08; needs `pos` on y): at a candidate match on a gram at
+    * canonical positions (px, py), overlap can be at most
+    * `1 + min(szx - px, szy - py)` — everything else must sit in the two
+    * suffixes — so prune when that ceiling is below `m.minOverlap`.
+    * Recall is EXACT: both gram arrays sort in the same global (df, gram)
+    * order, so a qualifying pair's FIRST shared gram has no shared grams
+    * before it on either side — its match row satisfies the ceiling, and
+    * that gram is df>=2 and inside x's prefix, so the row exists. The
+    * effect is candidate-set collapse BEFORE the verify join (the r15
+    * verify carried gram arrays for 34.9M sf10 candidates to find 25.6k
+    * true pairs).
+    */
+  private def candidateJoin(ranked: DataFrame, y: DataFrame,
+      blockCols: Seq[String], m: Measure, threshold: Double,
+      positional: Boolean): DataFrame = {
     val x = ranked.filter(col("in_prefix")).drop("in_prefix").as("x")
-    // positional=true (the GLOBAL caller): y = the RANKED df>=2 frame —
-    // a df=1 posting can never match a probe row either way, and the
-    // PPJoin filter below needs y's canonical-order position, which the
-    // ranking window provides. r15's dd8d814 rejected a bare y-side
-    // df-join (+0.4 s, NO candidate reduction); WITH the positional
-    // pruning the trade re-measured as the dominant win where candidates
-    // explode (sf10 global SSJoin: 34.9M -> ~1M candidates, end-to-end
-    // 59 s -> 37 s) — but as a net LOSS inside the blocked callers'
-    // small (lang, source[, len_bkt]) blocks (llm_dedup_containment
-    // 1.7 -> 2.5 s, llm_dedup_ngram 1.5 -> 1.9 s at sf0.1), where block
-    // bounds already cap the blow-up. Hence per-caller: global pays for
-    // ranking y, blocked keeps raw postings.
-    val y =
-      if (positional) ranked.drop("in_prefix").as("y")
-      else posts.as("y")
     val blockCond = blockCols.map(c => col(s"x.$c") === col(s"y.$c"))
       .foldLeft(lit(true))(_ && _)
-    // AllPairs length filter (Jaccard callers only): with |A| ≤ |B|,
-    // J(A,B) ≤ |A∩B|/|A∪B| ≤ |A|/|B|, so τ·|B| > |A| already implies
-    // J < τ — the verify join would discard the pair anyway, so pruning
-    // it here is recall-preserving. Boundary kept via the same 1e-9
-    // guard as the prefix bound (τ·|B| = |A| exactly CAN qualify: A ⊆ B
-    // with |A| = τ·|B|). MUST stay off for containment, whose whole
-    // point is small-doc-inside-large-doc pairs at unbounded size ratio.
     val lenCond =
-      if (jaccardLengthFilter)
+      if (m.lengthFilter)
         col("y.sz").cast("double") * lit(threshold) <=
           col("x.sz").cast("double") + lit(1e-9)
       else lit(true)
     val posCond =
-      if (positional) positionalCond(threshold, jaccardLengthFilter)
+      if (positional)
+        (lit(1) + least(col("x.sz") - col("x.pos"),
+          col("y.sz") - col("y.pos"))).cast("long") >=
+          m.minOverlap(col("x.sz"), col("y.sz"), threshold)
       else lit(true)
-    x.join(y, col("x.gram") === col("y.gram") && blockCond && lenCond &&
-        posCond &&
+    x.join(y.as("y"), col("x.gram") === col("y.gram") && blockCond &&
+        lenCond && posCond &&
         (col("x.sz") < col("y.sz") ||
           (col("x.sz") === col("y.sz") && col("x.doc_id") =!= col("y.doc_id"))))
       .select(least(col("x.doc_id"), col("y.doc_id")).as("a_id"),
@@ -654,8 +723,8 @@ object Dedup {
   }
 
   /** The canonical-order ranking pass shared by the lazy and sharded
-    * candidate generators: rank each doc's df>=2 grams rarest-first,
-    * recover each gram's position in the doc's FULL canonical order
+    * branches: rank each doc's df>=2 grams rarest-first, recover each
+    * gram's position in the doc's FULL canonical order
     * (`pos = sz - n2 + rk` — the doc's `sz - n2` df=1 grams sort
     * strictly first), and mark the prefix rows
     * (`rk <= n2 - ceil(tau*sz) + 1`, the df=1-pruned form of the
@@ -677,34 +746,6 @@ object Dedup {
         col("gram") :+ col("pos") :+ col("in_prefix"): _*)
   }
 
-  /** PPJoin positional filter (Xiao, Wang, Lin, Yu — WWW'08): at a
-    * candidate match on a gram at canonical positions (px, py), overlap
-    * can be at most `1 + min(szx - px, szy - py)` — everything else must
-    * sit in the two suffixes. Prune when that ceiling is below the
-    * measure's required overlap: Jaccard >= τ needs
-    * o >= τ/(1+τ)·(szx+szy); containment >= τ (with szx <= szy by the
-    * join's size order) needs o >= τ·szx. Recall is EXACT: both gram
-    * arrays sort in the same global (df, gram) order, so a qualifying
-    * pair's FIRST shared gram has no shared grams before it on either
-    * side — its match row satisfies the ceiling, and that gram is
-    * df>=2 and inside x's prefix (the prefix bound), so the row exists.
-    * Effect is candidate-set collapse BEFORE the verify join — the r15
-    * verify carried gram arrays for 34.9M sf10 candidates to find 25.6k
-    * true pairs; the positional filter removes the 1-shared-rare-gram
-    * bulk that dominates a shingled corpus.
-    */
-  private def positionalCond(threshold: Double,
-      jaccardLengthFilter: Boolean): org.apache.spark.sql.Column = {
-    val oReq =
-      if (jaccardLengthFilter)
-        ceil((col("x.sz") + col("y.sz")).cast("double") *
-          lit(threshold / (1.0 + threshold)) - lit(1e-9))
-      else
-        ceil(col("x.sz").cast("double") * lit(threshold) - lit(1e-9))
-    (lit(1) + least(col("x.sz") - col("x.pos"),
-      col("y.sz") - col("y.pos"))).cast("long") >= oReq
-  }
-
   /** Pass counts for the disk-bounded sharded SSJoin (r16, VERDICT item
     * 1). The third decade found the exact global SSJoin's wall: at 5M
     * docs (~260M postings) the candidate join's OUTPUT spill — the
@@ -716,29 +757,10 @@ object Dedup {
     * multiset split with it. The probe (window) stage is postings-bound,
     * not output-bound, so it shards at a coarser kProbe by doc-hash
     * range (the rank window partitions by doc_id — every pass computes
-    * its docs' ranks EXACTLY).
-    *
-    * Sizing: one candidate pass per ~32M postings — ABOVE the sf10
-    * scale that completed comfortably unsharded (26M postings), so that
-    * whole decade keeps the bit-identical lazy plan; sf0.1 and below
-    * stay at 1 pass, sf100 lands ~9 passes of ~29M postings each (≈ the
-    * proven-comfortable per-pass volume). The previous 20M default put
-    * sf10 itself at kCand = 2, which on the EAGER indexed operators
-    * (containment/ngram) executed the full staged pipeline at call time
-    * for a decade that never needed sharding (VERDICT r17 item 7 / r18
-    * item 4). Caps at 256 passes as a runaway bound (at that point the
-    * corpus belongs on a cluster, where per-executor disk scales out
-    * and passes can drop back to 1).
+    * its docs' ranks EXACTLY). Caps at 256 passes as a runaway bound (at
+    * that point the corpus belongs on a cluster, where per-executor disk
+    * scales out and passes can drop back to 1).
     */
-  /** Default candidate-pass size: ~32M postings/pass — sized so the
-    * largest decade measured to complete comfortably unsharded (sf10,
-    * 26M postings) stays on the lazy branch. Env-overridable so scale
-    * rehearsals can probe the knob without a code change.
-    */
-  private[graft] val defaultSsjPostsPerPass: Long =
-    sys.env.get("SPARK_GRAFT_SSJ_POSTS_PER_PASS").map(_.toLong)
-      .getOrElse(32000000L)
-
   private[graft] def ssjShardCounts(totalPostings: Long,
       candPostsPerPass: Long): (Int, Int) = {
     require(candPostsPerPass >= 1, s"candPostsPerPass must be >= 1")
@@ -749,6 +771,18 @@ object Dedup {
     (passes(candPostsPerPass * 8), passes(candPostsPerPass))
   }
 
+  /** Default candidate-pass size: one pass per ~32M postings — ABOVE the
+    * sf10 scale that completed comfortably unsharded (26M postings), so
+    * that whole decade keeps the bit-identical lazy plan; sf0.1 and below
+    * stay at 1 pass, sf100 lands ~9 passes of ~29M postings each (≈ the
+    * proven-comfortable per-pass volume). The previous 20M default put
+    * sf10 itself at kCand = 2, which on the EAGER indexed operators
+    * (containment/ngram) executed the full staged pipeline at call time
+    * for a decade that never needed sharding (VERDICT r17 item 7 / r18
+    * item 4). Scale rehearsals pass `candPostsPerPass` per call.
+    */
+  private[graft] final val defaultSsjPostsPerPass = 32000000L
+
   /** Default verify-pass size: ~20M candidate PAIRS per pass. The r16
     * sf100 attribution run found the sharded SSJoin's remaining wall is
     * not candidate generation (14 passes at ~11-18 s each, stage disk
@@ -757,347 +791,123 @@ object Dedup {
     * every candidate, and at 125M within-copy candidates that is an
     * ~80 GB two-join shuffle — the stage that took a 252 GB box from
     * 39 GB free to ENOSPC while every earlier stage stayed bounded.
-    * Like the candidate knob, env-overridable for scale rehearsals.
     */
-  private[graft] val defaultSsjPairsPerPass: Long =
-    sys.env.get("SPARK_GRAFT_SSJ_PAIRS_PER_PASS").map(_.toLong)
-      .getOrElse(20000000L)
+  private[graft] final val defaultSsjPairsPerPass = 20000000L
 
-  /** Sequential verify passes for [[shingleJaccardPairsGlobal]]'s
-    * sharded branch: ceil(candidates / pairsPerPass), same 256-pass
-    * runaway cap as [[ssjShardCounts]].
+  /** Sequential verify passes for the sharded branch:
+    * ceil(candidates / pairsPerPass), same 256-pass runaway cap as
+    * [[ssjShardCounts]].
     */
   private[graft] def ssjVerifyPasses(nCand: Long, pairsPerPass: Long): Int = {
     require(pairsPerPass >= 1, s"pairsPerPass must be >= 1")
     math.min(256L, math.max(1L, (nCand + pairsPerPass - 1) / pairsPerPass)).toInt
   }
 
-  /** [[prefixCandidates]] re-expressed as K disk-bounded sequential
-    * passes with parquet stage boundaries — the 100 TB form of the exact
-    * SSJoin when the corpus outgrows what one shuffle can spill
-    * (VERDICT r15 item 1; the checkpointed-TABLE stage contract, not an
-    * executor cache).
-    *
-    * Output identity with the lazy form is structural, spec-pinned in
-    * `SsjShardSpec`:
-    *  - document frequencies are exact per gram-shard (a gram's postings
-    *    all hash to one shard — computed ONCE globally here);
-    *  - the prefix-rank window partitions by doc_id, so doc-hash
-    *    sharding computes every doc's ranks over its full df>=2 gram
-    *    set, unchanged;
-    *  - every qualifying pair shares >= 1 probe-prefix gram, and that
-    *    gram's candidate pass emits the pair — union over passes is the
-    *    exact unsharded candidate set (per-pass `.distinct()` bounds the
-    *    stage parquet; the final cross-pass `.distinct()` collapses
-    *    pairs found via grams in different shards).
-    *
-    * Peak disk per pass: candidate-join input ~P/kCand postings plus its
-    * 1/kCand share of the pair-multiset spill; shuffle files of a
-    * finished pass are released by the ContextCleaner (System.gc() after
-    * each write enqueues them — cleanup is async, so worst-case overlap
-    * is ~2 passes, still ~2/kCand of the unsharded peak). Stage parquet
-    * (posts+df, probe prefixes, per-pass pairs) is hash-compressed
-    * columnar — ~single-digit GB at 5M docs against the tens-of-GB
-    * shuffle it replaces.
+  /** Operator-owned stage directories: one fresh [[graft.util.Scratch]]
+    * name per sharded call, so two joins running at once (`Par` legs)
+    * never share one.
     */
-  private def prefixCandidatesSharded(g: DataFrame, blockCols: Seq[String],
-      threshold: Double, jaccardLengthFilter: Boolean,
-      kProbe: Int, kCand: Int, dir: String): DataFrame = {
-    val spark = g.sparkSession
-    val posts = g.select(col("doc_id") +: blockCols.map(col) :+
-      size(col("grams")).as("sz") :+ explode(col("grams")).as("gram"): _*)
-    // Stage A (one job, postings-sized shuffles only — no output term):
-    // df per gram (map-side combined), df=1 dropped (cannot candidate),
-    // joined back to postings and materialized as the posts2 TABLE.
-    val dfreq = posts.groupBy(col("gram")).agg(count(lit(1)).as("df"))
-      .filter(col("df") >= 2)
-    posts.join(dfreq, "gram")
-      .write.mode("overwrite").parquet(s"$dir/posts2")
-    System.gc()
-    val posts2 = spark.read.parquet(s"$dir/posts2")
-    // Stage B (kProbe passes, doc-hash sharded): the [[rankedPostings]]
-    // window — identical expressions to the lazy path — written as ONE
-    // ranked table serving both candidate-join sides (the probe rows are
-    // the in_prefix subset; the y side needs pos for the positional
-    // filter and df=1 rows never match, so the ranked frame IS the y
-    // side).
-    for (i <- 0 until kProbe) {
-      rankedPostings(
-        posts2.filter(pmod(xxhash64(col("doc_id")), lit(kProbe)) === i),
-        blockCols, threshold)
-        .write.mode(if (i == 0) "overwrite" else "append")
-        .parquet(s"$dir/ranked")
-      System.gc()
-    }
-    val rankedAll = spark.read.parquet(s"$dir/ranked")
-    // Stage C (kCand passes, gram-hash sharded): the candidate join with
-    // the same AllPairs length + PPJoin positional pruning as the lazy
-    // form.
-    val blockCond = blockCols.map(c => col(s"x.$c") === col(s"y.$c"))
-      .foldLeft(lit(true))(_ && _)
-    val lenCond =
-      if (jaccardLengthFilter)
-        col("y.sz").cast("double") * lit(threshold) <=
-          col("x.sz").cast("double") + lit(1e-9)
-      else lit(true)
-    for (j <- 0 until kCand) {
-      val shard = rankedAll
-        .filter(pmod(xxhash64(col("gram")), lit(kCand)) === j)
-      val x = shard.filter(col("in_prefix")).drop("in_prefix").as("x")
-      val y = shard.drop("in_prefix").as("y")
-      x.join(y, col("x.gram") === col("y.gram") && blockCond && lenCond &&
-          positionalCond(threshold, jaccardLengthFilter) &&
-          (col("x.sz") < col("y.sz") ||
-            (col("x.sz") === col("y.sz") && col("x.doc_id") =!= col("y.doc_id"))))
-        .select(least(col("x.doc_id"), col("y.doc_id")).as("a_id"),
-          greatest(col("x.doc_id"), col("y.doc_id")).as("b_id"))
-        .distinct()
-        .write.mode(if (j == 0) "overwrite" else "append")
-        .parquet(s"$dir/cand")
-      System.gc()
-    }
-    spark.read.parquet(s"$dir/cand").distinct()
-  }
+  private val ssjRuns = new java.util.concurrent.atomic.AtomicLong
 
-  /** [[ngramJaccardPairs]] with prefix-filtered candidate generation —
-    * same output contract (including the (lang, source, len_bkt)
-    * blocking the oracle twin declares), exact recall by the shared
-    * [[prefixCandidates]] bound, sub-quadratic within blocks. The
-    * length bucket stays PART OF THE SEMANTICS (near-equal-length
-    * blocking is the operator's declared recall trade); what changes is
-    * that within a block candidates come from the inverted prefix index
-    * instead of an all-pairs join, so a hot (lang, source, len_bkt)
-    * block no longer goes quadratic.
+  /** [[similarityJoin]]'s lazy branch re-expressed as disk-bounded
+    * sequential passes with parquet stage boundaries — the 100 TB form
+    * of the exact SSJoin when the corpus outgrows what one shuffle can
+    * spill (VERDICT r15 item 1; the checkpointed-TABLE stage contract,
+    * not an executor cache). EAGER: the whole pipeline runs at call time.
     *
-    * EAGER past the posting threshold (ADVICE r17): a construction-time
-    * aggregate sizes the shards (forcing the persisted gram frame), and
-    * above ~160M postings the sharded branch executes the full
-    * candidate+verify pipeline at CALL time — don't construct
-    * speculatively on large corpora. Below the threshold only the
-    * sizing aggregate runs; the returned plan stays lazy.
+    *  - Stage A: `posts2` (df>=2 postings, df computed ONCE globally — a
+    *    gram's postings all hash to one shard, so df is exact per shard).
+    *  - Stage B, kProbe doc-hash passes: the [[rankedPostings]] window
+    *    (it partitions by doc_id, so every pass computes its docs' full
+    *    ranks), written as ONE ranked table serving both candidate-join
+    *    sides.
+    *  - Stage C, kCand gram-hash passes: [[candidateJoin]] per gram shard.
+    *    Every qualifying pair shares >= 1 probe-prefix gram, whose pass
+    *    emits it; the cross-pass `.distinct()` is materialized ONCE as
+    *    `candd` (each verify pass then filter-scans the slim pair table).
+    *  - Verify, kVer pair-hash passes against a parquet copy of the gram
+    *    frame: per pass only 1/kVer of the pairs hangs gram arrays in a
+    *    shuffle (the r16 sf100 ENOSPC stage); pmod partitions the
+    *    distinct pair set, so each pair is verified once, by the same
+    *    [[verifyPairs]].
+    *
+    * Output identity with the lazy form is spec-pinned in
+    * `SsjShardSpec`. Peak disk per pass is ~1/K of the one-shuffle form:
+    * shuffle files of a finished pass are released by the ContextCleaner
+    * (`System.gc()` after each write enqueues them — cleanup is async, so
+    * worst-case overlap is ~2 passes).
+    *
+    * Stage tables go to `stageDir` when given — kept as the auditable,
+    * restartable contract — else to a fresh scratch dir whose
+    * intermediates are dropped before returning (a multi-query session
+    * would otherwise accumulate a stage-table set per call, ~tens of GB
+    * each at 5M docs); only the `pairs` table it reads stays.
     */
-  def ngramJaccardPairsIndexed(docs: DataFrame, n: Int, charBucket: Int,
-      threshold: Double,
-      candPostsPerPass: Long = defaultSsjPostsPerPass,
-      stageDir: Option[String] = None,
-      pairsPerVerifyPass: Long = defaultSsjPairsPerPass): DataFrame = {
-    val g = persistGrams(gramSets(docs, n, charBucket))
-    def verify(cand: DataFrame, grams: DataFrame): DataFrame = {
-      val common = graft.functions.SortedIntersectCount(col("a.grams"), col("b.grams"))
-      cand
-        .join(grams.as("a"), col("a_id") === col("a.doc_id"))
-        .join(grams.as("b"), col("b_id") === col("b.doc_id"))
-        .withColumn("common", common)
-        .withColumn("jaccard", col("common").cast("double") /
-          (size(col("a.grams")) + size(col("b.grams")) - col("common")).cast("double"))
-        .filter(col("jaccard") >= threshold)
-        .select(col("a_id"), col("b_id"),
-          graft.functions.Rounding.roundTo(col("jaccard"), 4).as("jaccard"))
-    }
-    // auto-sharded past the posting threshold, same rationale as
-    // [[containmentPairsIndexed]] (r17)
-    val (kProbe, kCand) = ssjShardCounts(totalPostings(g), candPostsPerPass)
-    if (kCand <= 1)
-      verify(prefixCandidates(g, Seq("lang", "source", "len_bkt"), threshold,
-        jaccardLengthFilter = true), g)
-    else
-      shardedVerifiedPairs(g, Seq("lang", "source", "len_bkt"), threshold,
-        jaccardLengthFilter = true, kProbe, kCand, stageDir,
-        pairsPerVerifyPass)(verify)
-  }
-
-  /** EXACT `n`-token-shingle Jaccard near-dup pairs over the WHOLE
-    * corpus (no blocking) — the deterministic ground-truth twin of the
-    * MinHash-LSH family. The shingle set is EXACTLY what
-    * [[minhashSignatures]] sketches (distinct `n`-token shingles of the
-    * `' '`-split tokens), so this is the quantity a minhash agreement
-    * fraction ESTIMATES; what differs is candidate generation: instead
-    * of LSH band buckets (hash-family-specific, recall < 1 by
-    * construction) candidates come from [[prefixCandidates]] with an
-    * EMPTY block list — the Chaudhuri/Bayardo prefix-filter bound holds
-    * corpus-wide, so the pair set is exactly
-    * `{ (a,b) : J(shingles(a), shingles(b)) >= threshold }` with no
-    * hash-family dependence (modulo the declared per-pair 64-bit
-    * gram-collision bound — see [[Fnv64Offset]]).
-    *
-    * This is what lets the MinHash family graduate from rows-only to
-    * hash-oracled (late r12, the IVF verdict pattern): the hashed surface of
-    * `llm_dedup_fuzzy`/`_keep`/`_incremental` is built from THIS exact
-    * pair set (DuckDB twin = brute-force `list_intersect` Jaccard at
-    * oracle scale), while the LSH pipeline still runs in the same plan
-    * and its recall against this set is pinned by a verdict column.
-    *
-    * Needs only `(doc_id, text)` on the input (unlike [[gramSets]], so
-    * the streaming replay's constructed batches can use it); null-text
-    * docs are dropped, mirroring the blocked family and the
-    * `string_split(NULL)` twin.
-    *
-    * Scale shape: unblocked AllPairs is the published SSJoin form —
-    * postings sorted rarest-first, probe side pruned to the
-    * `(sz − ⌈τ·sz⌉ + 1)`-gram prefix, so corpus-common shingles fall
-    * out of the probe prefixes and the candidate join is
-    * output-bounded, not n². Verification is the same sorted-merge
-    * intersect kernel as the blocked n-gram family; no text bodies
-    * shuffle — only 8-byte shingle hashes. Past ~160M postings the
-    * whole operator switches to the disk-bounded K-pass form: candidate
-    * generation via [[prefixCandidatesSharded]] (gram-hash passes) and
-    * verification via kVer sequential pair-hash passes against a
-    * parquet-staged gram table — same pair set (spec-pinned), peak
-    * shuffle spill ~1/K per stage — the form that survives 5M docs
-    * (125M candidates) on one box.
-    *
-    * EAGER past the threshold: the lazy (1-pass) branch returns an
-    * unexecuted plan as usual, but the sharded branch runs the whole
-    * pipeline — candidate passes, counts, every verify pass — at CALL
-    * time and returns a reader over the staged result. Don't construct
-    * this frame speculatively on corpora above ~160M postings; by the
-    * time you hold the DataFrame the join has already run.
-    */
-  def shingleJaccardPairsGlobal(docs: DataFrame, n: Int,
-      threshold: Double,
-      candPostsPerPass: Long = defaultSsjPostsPerPass,
-      stageDir: Option[String] = None,
-      pairsPerVerifyPass: Long = defaultSsjPairsPerPass): DataFrame = {
-    val g = persistGrams(slimGramSets(docs, n))
-    // Auto-sized disk-bounded sharding (r16): one cheap aggregate over
-    // the persisted gram frame (which every downstream branch forces
-    // anyway) sizes the candidate join to the corpus. Below ~160M
-    // postings (sf10-and-below here) this resolves to ONE pass and the
-    // plan is the unchanged lazy form; above it the operator runs the
-    // K-pass parquet-staged form so no single shuffle ever spills more
-    // than ~1/K of the pair multiset — the difference between the sf100
-    // row completing and `No space left on device`.
-    val (kProbe, kCand) = ssjShardCounts(totalPostings(g), candPostsPerPass)
-    // Shared verify plan: exact sorted-merge gram intersection over a
-    // candidate frame, columns/types identical between the lazy and
-    // sharded branches (the oracle hashes this surface).
-    def verify(cand: DataFrame, grams: DataFrame): DataFrame = {
-      val common = graft.functions.SortedIntersectCount(col("a.grams"), col("b.grams"))
-      cand
-        .join(grams.as("a"), col("a_id") === col("a.doc_id"))
-        .join(grams.as("b"), col("b_id") === col("b.doc_id"))
-        .withColumn("common", common)
-        .withColumn("jaccard", col("common").cast("double") /
-          (size(col("a.grams")) + size(col("b.grams")) - col("common")).cast("double"))
-        .filter(col("jaccard") >= threshold)
-        .select(col("a_id"), col("b_id"),
-          graft.functions.Rounding.roundTo(col("jaccard"), 4).as("jaccard"))
-    }
-    if (kCand <= 1)
-      verify(prefixCandidates(g, Seq.empty, threshold,
-        jaccardLengthFilter = true, positional = true), g)
-    else
-      shardedVerifiedPairs(g, Seq.empty, threshold,
-        jaccardLengthFilter = true, kProbe, kCand, stageDir,
-        pairsPerVerifyPass)(verify)
-  }
-
-  /** Total posting count of a gram frame — the number every auto-shard
-    * decision keys on. One cheap aggregate; the callers persist `g` and
-    * force it downstream anyway.
-    */
-  private def totalPostings(g: DataFrame): Long =
-    // Measured r20: do NOT skip this below the shard threshold (an
-    // input-size-derived decision looked like one job saved) — the agg
-    // doubles as the cache WARM-UP for `g`, whose verify join scans it
-    // twice in one job; skipping it re-ran the gram kernel per scan and
-    // read 10-14% SLOWER on every lazy-branch row (fuzzy 2.80 -> 3.18 s,
-    // fuzzy_keep 3.80 -> 4.34, containment 1.67 -> 1.83; anchor flat).
-    Option(g.agg(sum(size(col("grams")))).head().get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
-
-  /** The disk-bounded K-pass execution shared by every prefix-filter
-    * pair operator past its posting threshold (r17: extracted from
-    * [[shingleJaccardPairsGlobal]] so the BLOCKED indexed operators get
-    * the same escape — the sf100 decade run ENOSPC'd
-    * `llm_dedup_containment` in exactly the one-shuffle shape the
-    * global form had already outgrown).
-    *
-    * Candidate generation runs via [[prefixCandidatesSharded]] (kProbe
-    * doc-hash ranked passes, kCand gram-hash candidate passes), the
-    * distinct pair set and the slim gram table are parquet-staged, and
-    * `verify` — the caller's exact measure expressions, identical to
-    * its lazy branch — runs as kVer sequential pair-hash passes. Peak
-    * shuffle spill is ~1/K per stage. EAGER: the whole pipeline runs at
-    * call time; the returned frame reads the staged result.
-    *
-    * Output identity with the caller's lazy form is the SsjShardSpec
-    * argument, unchanged by blocking: a gram's postings (and so its
-    * candidate output) live in one gram shard regardless of block
-    * columns, the rank window partitions by doc_id, positional/prefix
-    * pruning is recall-exact for both measures, and pmod partitions the
-    * distinct pair set across verify passes.
-    */
-  private def shardedVerifiedPairs(g: DataFrame, blockCols: Seq[String],
-      threshold: Double, jaccardLengthFilter: Boolean,
+  private def shardedPairs(g: DataFrame, posts2: DataFrame,
+      blockCols: Seq[String], m: Measure, threshold: Double,
       kProbe: Int, kCand: Int, stageDir: Option[String],
-      pairsPerVerifyPass: Long)(
-      verify: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    // Disk-bounded form, candidate AND verify stages (r16): the sf100
-    // attribution run showed candidate passes bounded but the verify
-    // join's gram-array shuffle (~700 B x 125M pairs here) taking the
-    // box to ENOSPC in one stage. So the verify runs as kVer
-    // sequential pair-hash passes against a parquet-staged gram
-    // table: per pass only 1/kVer of the pair multiset hangs arrays
-    // in a shuffle, and a finished pass's files are GC-released
-    // before the next. Output identity is trivial (pmod partitions
-    // the distinct pair set; each pair is verified in exactly one
-    // pass, by the same expressions) — spec-pinned in SsjShardSpec
-    // alongside the candidate-shard identity.
+      pairsPerVerifyPass: Long): DataFrame = {
     val spark = g.sparkSession
-    val dir = stageDir.getOrElse {
-      val d = java.nio.file.Files
-        .createTempDirectory("graft_ssj_").toFile
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(d)
-      }
-      d.getAbsolutePath
-    }
-    // cross-pass distinct materialized ONCE (each verify pass then
-    // filter-scans the slim pair table instead of re-running the
-    // 100M+-row distinct exchange per pass)
-    prefixCandidatesSharded(g, blockCols, threshold,
-      jaccardLengthFilter, kProbe, kCand, dir)
-      .write.mode("overwrite").parquet(s"$dir/candd")
-    System.gc()
-    val candD = spark.read.parquet(s"$dir/candd")
-    g.select(col("doc_id"), col("grams"))
-      .write.mode("overwrite").parquet(s"$dir/grams")
-    // nothing downstream reads the cached gram frame (verify scans
-    // the parquet copy) — release its corpus-sized MEMORY_AND_DISK
-    // spill now, not after kVer more passes; that disk IS the
-    // headroom the sharding exists to protect. The lazy branch keeps
-    // the cache (cleared by callers per the clearCache contract).
-    g.unpersist()
-    System.gc()
-    val gp = spark.read.parquet(s"$dir/grams")
-    val kVer = ssjVerifyPasses(candD.count(), pairsPerVerifyPass)
-    for (v <- 0 until kVer) {
-      verify(candD.filter(
-          pmod(xxhash64(col("a_id"), col("b_id")), lit(kVer)) === v), gp)
-        .write.mode(if (v == 0) "overwrite" else "append")
-        .parquet(s"$dir/pairs")
+    val dir = stageDir.getOrElse(
+      graft.util.Scratch.fresh(s"ssj_${ssjRuns.incrementAndGet()}"))
+    def stage(table: String, df: DataFrame, append: Boolean = false): Unit = {
+      df.write.mode(if (append) "append" else "overwrite")
+        .parquet(s"$dir/$table")
       System.gc()
     }
-    // The default (operator-owned) tempdir is otherwise cleaned only
-    // at JVM exit, so a multi-query session running several sharded
-    // joins would accumulate one full set of stage tables per call
-    // (~tens of GB each at 5M docs) — the r17 sf100 bench sweep would
-    // ENOSPC on its own staging. The result table is the only stage
-    // output still referenced past this point; drop the intermediates
-    // now. A caller-provided stageDir keeps everything: those tables
-    // ARE the auditable/restartable contract.
-    if (stageDir.isEmpty) {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      Seq("posts2", "ranked", "cand", "candd", "grams")
-        .foreach(t => rm(new java.io.File(dir, t)))
+    def read(table: String): DataFrame = spark.read.parquet(s"$dir/$table")
+    stage("posts2", posts2)
+    val staged = read("posts2")
+    for (i <- 0 until kProbe)
+      stage("ranked", rankedPostings(
+        staged.filter(pmod(xxhash64(col("doc_id")), lit(kProbe)) === i),
+        blockCols, threshold), append = i > 0)
+    val ranked = read("ranked")
+    for (j <- 0 until kCand) {
+      val shard = ranked.filter(pmod(xxhash64(col("gram")), lit(kCand)) === j)
+      stage("cand", candidateJoin(shard, shard.drop("in_prefix"), blockCols,
+        m, threshold, positional = true), append = j > 0)
     }
-    spark.read.parquet(s"$dir/pairs")
+    stage("candd", read("cand").distinct())
+    stage("grams", g.select(col("doc_id"), col("grams")))
+    // nothing downstream reads the cached gram frame (verify scans the
+    // parquet copy) — release its corpus-sized MEMORY_AND_DISK spill
+    // now, not after kVer more passes; that disk IS the headroom the
+    // sharding exists to protect
+    g.unpersist()
+    val candD = read("candd")
+    val gp = read("grams")
+    val kVer = ssjVerifyPasses(candD.count(), pairsPerVerifyPass)
+    for (v <- 0 until kVer)
+      stage("pairs", verifyPairs(candD.filter(
+          pmod(xxhash64(col("a_id"), col("b_id")), lit(kVer)) === v),
+        gp, m, threshold), append = v > 0)
+    if (stageDir.isEmpty)
+      Seq("posts2", "ranked", "cand", "candd", "grams")
+        .foreach(t => graft.util.Scratch.delete(s"$dir/$t"))
+    read("pairs")
+  }
+
+  /** The one exact verify: candidate pairs `(a_id, b_id)` joined to
+    * both docs' sorted gram arrays in `grams` (`doc_id`, `grams`),
+    * |A∩B| by the codegen'd sorted-merge intersect, `m`'s score kept
+    * when `>= threshold` (unrounded), and `(a_id, b_id, <m.name>)` out
+    * with the score rounded to 4 places. Both [[similarityJoin]]
+    * branches run it, and so does `llm_dedup_fuzzy_keep`'s token-set
+    * gate — columns and types are what the oracle hashes.
+    */
+  private[graft] def verifyPairs(cand: DataFrame, grams: DataFrame,
+      m: Measure, threshold: Double): DataFrame = {
+    val common = graft.functions.SortedIntersectCount(col("a.grams"), col("b.grams"))
+    cand
+      .join(grams.as("a"), col("a_id") === col("a.doc_id"))
+      .join(grams.as("b"), col("b_id") === col("b.doc_id"))
+      .withColumn("common", common)
+      .withColumn(m.name,
+        m.score(col("common"), size(col("a.grams")), size(col("b.grams"))))
+      .filter(col(m.name) >= threshold)
+      .select(col("a_id"), col("b_id"),
+        graft.functions.Rounding.roundTo(col(m.name), 4).as(m.name))
   }
 
   /** [[gramSets]] for inputs that carry only `(doc_id, text)` — same
@@ -1114,129 +924,20 @@ object Dedup {
       .select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)]
       .mapPartitions { it =>
-        it.map { case (id, text) =>
-          val hs = gramHashes(text.split(" ", -1), n, Fnv64Offset)
-          java.util.Arrays.sort(hs)
-          var w = 0; var r = 0
-          while (r < hs.length) {
-            if (w == 0 || hs(r) != hs(w - 1)) { hs(w) = hs(r); w += 1 }
-            r += 1
-          }
-          (id, java.util.Arrays.copyOf(hs, w))
-        }
+        it.map { case (id, text) => (id, gramSet(text, n, Fnv64Offset)) }
       }
       .toDF("doc_id", "grams")
   }
 
-  /** Containment pairs with winnowing-fingerprint candidate generation —
-    * the APPROXIMATE sibling of [[containmentPairsIndexed]] for
-    * run-shaped duplication (quotes, boilerplate, embedded documents).
-    *
-    * Candidates = doc pairs in the same (lang, source) block sharing at
-    * least one winnowing fingerprint ([[winnowIndex]]); each candidate
-    * is verified with the identical sorted-merge intersect. Recall
-    * contract: winnowing over `n`-gram hashes with window `w` guarantees
-    * a shared fingerprint for any shared token run of length
-    * >= w + n − 1 (MOSS guarantee; Schleimer et al. SIGMOD'03) — at the
-    * default w = 4, n = 2 every >= 5-token shared run is caught, while a
-    * pair whose overlap is exclusively SCATTERED grams can be missed
-    * (measured: 10 of 36 sf0.001 pairs — which is why the shipped
-    * llm_dedup_containment uses the exact prefix-filter path instead).
-    * The payoff is index density ~2/(w+1) of the gram count vs the
-    * prefix index's ~(1−τ): when the duplication you hunt is runs, this
-    * form reads and shuffles a fraction of the postings.
-    *
-    * `maxFpDf` optionally drops fingerprints whose document frequency
-    * exceeds the cap (stop-fingerprints: site boilerplate shared by
-    * millions of docs would otherwise emit df² candidate pairs from one
-    * bucket). Off by default — capping narrows the MOSS guarantee to
-    * runs whose fingerprint stays under the cap, so it is an explicit
-    * operator decision, not a silent one.
-    */
-  def containmentPairsWinnow(docs: DataFrame, n: Int, threshold: Double,
-      window: Int = 4, maxFpDf: Option[Long] = None): DataFrame = {
-    // same multi-reference shape as the prefix-filter path: g feeds both
-    // verify legs and idx0 both candidate sides (plus the optional df cap)
-    val g = persistGrams(gramSets(docs, n, charBucket = 1).drop("len_bkt"))
-    val idx0 = persistGrams(winnowIndex(docs, n, window))
-    val idx = maxFpDf.fold(idx0) { cap =>
-      val hot = idx0.groupBy(col("fp")).agg(count(lit(1)).as("df"))
-        .filter(col("df") > cap).select(col("fp"))
-      idx0.join(hot, Seq("fp"), "left_anti")
-    }
-    val x = idx.as("x"); val y = idx.as("y")
-    val cand = x.join(y, col("x.fp") === col("y.fp") &&
-        col("x.lang") === col("y.lang") &&
-        col("x.source") === col("y.source") &&
-        col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
-      .distinct()
-    val common = graft.functions.SortedIntersectCount(col("a.grams"), col("b.grams"))
-    cand
-      .join(g.as("a"), col("a_id") === col("a.doc_id"))
-      .join(g.as("b"), col("b_id") === col("b.doc_id"))
-      .withColumn("common", common)
-      .withColumn("containment", col("common").cast("double") /
-        least(size(col("a.grams")), size(col("b.grams"))).cast("double"))
-      .filter(col("containment") >= threshold)
-      .select(col("a_id"), col("b_id"),
-        graft.functions.Rounding.roundTo(col("containment"), 4)
-          .as("containment"))
-  }
-
-  /** Winnowing-fingerprint inverted index rows `(doc_id, lang, source,
-    * fp)` over the SAME positional n-gram hash stream [[gramSets]]
-    * dedups — one shared kernel ([[gramHashes]]) computes both, so the
-    * index can never disagree with the verify side about what a gram is.
-    *
-    * Standard winnowing: slide a window of `window` consecutive gram
-    * hashes, keep each window's MINIMUM, per-doc distinct mins are the
-    * fingerprints. Docs shorter than one full window emit the min of
-    * their whole gram stream (>= 1 fingerprint for every non-null doc —
-    * a short doc is still indexable). Pure map, no shuffle; the index is
-    * ~2/(window+1) the gram count.
-    */
-  private[operators] def winnowIndex(docs: DataFrame, n: Int,
-      window: Int): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.filter(col("text").isNotNull)
-      .select(col("doc_id").cast("long"), col("lang"), col("source"), col("text"))
-      .as[(Long, String, String, String)]
-      .mapPartitions { it =>
-        it.flatMap { case (id, lang, source, text) =>
-          val hs = gramHashes(text.split(" ", -1), n, Fnv64Offset)
-          val nW = math.max(hs.length - window + 1, 1)
-          val fps = new java.util.HashSet[Long]
-          var j = 0
-          while (j < nW) {
-            var m = Long.MaxValue
-            var q = j
-            val end = math.min(j + window, hs.length)
-            while (q < end) { if (hs(q) < m) m = hs(q); q += 1 }
-            fps.add(m)
-            j += 1
-          }
-          val out = new Array[(Long, String, String, Long)](fps.size)
-          val it2 = fps.iterator
-          var k = 0
-          while (it2.hasNext) { out(k) = (id, lang, source, it2.next()); k += 1 }
-          out.iterator
-        }
-      }
-      .toDF("doc_id", "lang", "source", "fp")
-  }
-
   /** Gram-set extraction shared by [[ngramJaccardPairs]] and
-    * [[containmentPairs]], as a per-partition kernel (same rationale as
-    * minhashSignatures): the declarative form re-evaluates split(text)
-    * inside the transform lambda — interpreted, one array alloc per gram
-    * — while this loop splits once and writes straight into a long[].
-    * FNV-1a 64 over the shingle chars stands in for the gram string
-    * (collisions ~|grams|²/2⁶⁴, deterministic). Output: one row per doc
-    * with its sorted DISTINCT gram hashes and the `n_chars/charBucket`
-    * length-bucket blocking key (pass charBucket = 1 to make the bucket
-    * a passthrough the caller ignores).
+    * [[containmentPairs]] and their indexed forms, as a per-partition
+    * kernel (same rationale as minhashSignatures): the declarative form
+    * re-evaluates split(text) inside the transform lambda — interpreted,
+    * one array alloc per gram — while [[gramSet]] splits once and writes
+    * straight into a long[]. Output: one row per doc with its sorted
+    * DISTINCT gram hashes and the `n_chars/charBucket` length-bucket
+    * blocking key (pass charBucket = 1 to make the bucket a passthrough
+    * the caller ignores).
     *
     * Tokenization parity with the DuckDB twins: `split(" ", -1)` keeps
     * trailing empty tokens exactly like `string_split` (a bare
@@ -1257,17 +958,24 @@ object Dedup {
       .as[(Long, String, String, Long, String)]
       .mapPartitions { it =>
         it.map { case (id, lang, source, nChars, text) =>
-          val hs = gramHashes(text.split(" ", -1), n, fnvOffset)
-          java.util.Arrays.sort(hs)
-          var w = 0; var r = 0
-          while (r < hs.length) {
-            if (w == 0 || hs(r) != hs(w - 1)) { hs(w) = hs(r); w += 1 }
-            r += 1
-          }
-          (id, lang, source, nChars / charBucket, java.util.Arrays.copyOf(hs, w))
+          (id, lang, source, nChars / charBucket, gramSet(text, n, fnvOffset))
         }
       }
       .toDF("doc_id", "lang", "source", "len_bkt", "grams")
+  }
+
+  /** The sorted DISTINCT `n`-gram hashes of one text (`split(" ", -1)`
+    * tokens) — the one kernel behind both gram frames.
+    */
+  private def gramSet(text: String, n: Int, fnvOffset: Long): Array[Long] = {
+    val hs = gramHashes(text.split(" ", -1), n, fnvOffset)
+    java.util.Arrays.sort(hs)
+    var w = 0; var r = 0
+    while (r < hs.length) {
+      if (w == 0 || hs(r) != hs(w - 1)) { hs(w) = hs(r); w += 1 }
+      r += 1
+    }
+    java.util.Arrays.copyOf(hs, w)
   }
 
   /** FNV-1a 64 offset basis — the production gram-hash family.
@@ -1296,9 +1004,8 @@ object Dedup {
     */
   private[operators] final val Fnv64AltOffset = 0x2B7E151628AED2A6L
 
-  /** Positional FNV-1a 64 hashes of the n-token grams of `toks` — the
-    * single kernel behind [[gramSets]] (sorted-distinct form) and
-    * [[winnowIndex]] (positional form). Hashes the gram's tokens joined
+  /** Positional FNV-1a 64 hashes of the n-token grams of `toks`, which
+    * [[gramSet]] sorts and dedups. Hashes the gram's tokens joined
     * by ' ' without materializing the string. A doc shorter than `n`
     * tokens yields ONE gram (the whole doc), mirroring the DuckDB twins'
     * clamped slice.

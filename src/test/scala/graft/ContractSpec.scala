@@ -67,11 +67,22 @@ class ContractSpec extends SparkSpec {
       "graft/pipeline/IndexCli.scala"),
       "build the session through graft.Session instead of a copied builder")
   }
+
+  test("no library source under operators, streaming, catalog or functions reads the environment") {
+    val readers = ContractSpec.mainSources.collect {
+      case (file, text) if ContractSpec.libraryDirs.exists(d => file.startsWith(s"graft/$d/")) &&
+          ContractSpec.envRead.findFirstIn(text).isDefined => file
+    }
+    assert(readers.isEmpty,
+      s"runtime knobs belong in the mains, graft.Session and the CLIs; found env reads in $readers")
+  }
 }
 
 object ContractSpec {
   private val root = java.nio.file.Paths.get("src/main/scala")
   val builder = """SparkSession\s*\.\s*builder""".r
+  val envRead = """sys\s*\.\s*env\b|System\s*\.\s*getenv""".r
+  val libraryDirs = Seq("operators", "streaming", "catalog", "functions")
 
   /** (path under src/main/scala, text) of every main source file. */
   lazy val mainSources: Seq[(String, String)] = {

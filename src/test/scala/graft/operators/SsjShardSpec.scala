@@ -152,6 +152,31 @@ class SsjShardSpec extends SparkSpec {
       docs, n = 2, threshold = 0.2, candPostsPerPass = 2000L,
       pairsPerVerifyPass = math.max(1L, lazyPairs.size / 2L)))
     assert(sharded === lazyPairs)
+    // a pair whose sizes are far apart: the DedupSpec containment fixture,
+    // doc 2 (3 bigrams) inside doc 1's tail (43 bigrams). Containment must
+    // never apply the AllPairs length filter, in either branch of the
+    // shared candidate join — with it, tau*|B| > |A| drops this pair.
+    import spark.implicits._
+    val big = ((1 to 40).map(i => "w" + i) ++ Seq("a", "b", "c", "d")).mkString(" ")
+    val d = Seq(
+      (1L, big, "en", "s0", big.length.toLong),
+      (2L, "a b c d", "en", "s0", 7L),
+      (3L, "a b c d", "en", "s1", 7L),
+      (4L, "q r s t", "en", "s0", 7L)
+    ).toDF("doc_id", "text", "lang", "source", "n_chars")
+    val want = Set((1L, 2L, 1.0))
+    assert(pairsOf(Dedup.containmentPairsIndexed(d, n = 2, threshold = 0.9)) === want)
+    val posts = Dedup.gramSets(d, 2, charBucket = 1)
+      .agg(sum(size(col("grams")))).head().getLong(0)
+    assert(Dedup.ssjShardCounts(posts, (posts + 1) / 2)._2 === 2)
+    // two operator-owned 2-pass calls, the first read after the second
+    // ran: each must stage under its own scratch name
+    val first = Dedup.containmentPairsIndexed(d, n = 2, threshold = 0.9,
+      candPostsPerPass = (posts + 1) / 2)
+    val second = Dedup.containmentPairsIndexed(d, n = 2, threshold = 0.9,
+      candPostsPerPass = (posts + 1) / 2)
+    assert(pairsOf(first) === want)
+    assert(pairsOf(second) === want)
     spark.catalog.clearCache()
   }
 
